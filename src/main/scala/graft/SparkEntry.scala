@@ -8218,9 +8218,8 @@ object SparkEntry {
       val snap = tf2.addSnapshot(manifestOnly = true)
       val tomlOk = tf2.availableSnapshots() == Seq(snap) &&
         tf2.readMeta().at("/dataset/name").asText == "toml_ds" &&
-        tf2.resolveSubpath(Some("1999-01-01 00:00:00")) ==
-          tf2.snapshotPath(snap) &&
-        tf2.resolveSubpath(None) == tf2.currentPath
+        tf2.snapshotAt(Some("1999-01-01 00:00:00")) == Some(snap) &&
+        tf2.snapshotAt(None).isEmpty
       tf2.read()
         .withColumn("toml_ok", lit(tomlOk))
         .orderBy("n_nationkey")

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 
+import scala.jdk.CollectionConverters._
+
 /** Time travel for a dataset directory — the reference's flagship
   * "TimeFly" feature (`/root/reference/src/pydala/dataset/timefly.py`).
   *
@@ -20,13 +22,18 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * }}}
   *
   * Snapshot resolution (`timefly.py:337-352`): given time t, pick the
-  * FIRST snapshot with id > t; if none, `current`. (Deliberately "next
-  * snapshot after t", not "latest before t" — replicated exactly.)
+  * FIRST snapshot with id > t; if none, `current` ([[snapshotAt]]).
+  * (Deliberately "next snapshot after t", not "latest before t" —
+  * replicated exactly.)
   *
-  * Scale note: the reference snapshots by copying data
-  * (`timefly.py:301-304`). We keep that observable behavior (tests run at
-  * toy scale) but `addSnapshot(manifestOnly = true)` records only the file
-  * list — the 100 TB path, where a snapshot is metadata, not a copy.
+  * A snapshot is a FILE SET, either recorded or listed. The reference
+  * snapshots by copying data (`timefly.py:301-304`); a copy snapshot's
+  * set is the recursive listing of `snapshot/<id>/`. `addSnapshot(
+  * manifestOnly = true)` records the live file list in the metadata
+  * instead — the 100 TB path, where a snapshot is metadata, not a copy.
+  * Every read (as-of, tag, readSince baseline, history, cloneTo)
+  * resolves a snapshot through `snapshotFiles` and scans the set
+  * through `scan`, so both kinds serve the same rows and columns.
   */
 final class TimeFly(spark: SparkSession, root: String) {
 
@@ -143,9 +150,8 @@ final class TimeFly(spark: SparkSession, root: String) {
     // keep-last) actually relies on — without writers having to
     // sleep through the clock between snapshots.
     val id = {
-      val ids = scala.collection.mutable.ArrayBuffer[String]()
-      snap.withArray("available").forEach(n => ids += n.asText())
-      snap.withArray("deleted").forEach(n => ids += n.asText())
+      val ids = strings(snap.path("available")) ++
+        strings(snap.path("deleted"))
       val now = nowId()
       if (ids.isEmpty || ids.max < now) now else nextId(ids.max)
     }
@@ -156,8 +162,7 @@ final class TimeFly(spark: SparkSession, root: String) {
       // a shallow clone's live view includes its borrowed base — the
       // manifest must capture the WHOLE view, not just local files
       val files = entry.putArray("files")
-      (cloneBaseFiles() ++
-        SchemaTools.listDataFiles(spark, currentPath)).foreach(files.add)
+      liveFiles().foreach(files.add)
     } else {
       require(cloneBaseFiles().isEmpty,
         "copy snapshot on a shallow clone would silently drop the " +
@@ -192,8 +197,14 @@ final class TimeFly(spark: SparkSession, root: String) {
     writeMeta(node)
   }
 
-  /** Restore a snapshot into `current/` (`timefly.py:354-387`). */
+  /** Restore a copy snapshot into `current/` (`timefly.py:354-387`).
+    * A manifest-only snapshot is refused: its files live in `current/`,
+    * and restoring it in place would delete files that later manifests
+    * may pin. */
   def loadSnapshot(id: String): Unit = {
+    require(!readMeta().at(s"/snapshot/$id/manifest_only").asBoolean(false),
+      s"snapshot $id is manifest-only and cannot be restored in place; " +
+        "read it with read(asOf) or copy it out with cloneTo(asOf)")
     val src = new Path(snapshotPath(id))
     require(fs.exists(src), s"snapshot $id does not exist")
     fs.delete(new Path(currentPath), true)
@@ -292,13 +303,9 @@ final class TimeFly(spark: SparkSession, root: String) {
     TimeFly.VacuumStats(orphans.size, stale.size, expired)
   }
 
-  def availableSnapshots(): Seq[String] = {
-    if (!exists()) return Nil
-    val arr = readMeta().withObject("/snapshot").withArray("available")
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    arr.forEach(n => buf += n.asText())
-    buf.toSeq.sorted
-  }
+  def availableSnapshots(): Seq[String] =
+    if (!exists()) Nil
+    else strings(readMeta().at("/snapshot/available")).sorted
 
   /** Named refs over snapshots (Iceberg-style tags): an immutable
     * name → snapshot-id binding in the metadata. Tags make releases
@@ -337,83 +344,75 @@ final class TimeFly(spark: SparkSession, root: String) {
   }
 
   /** Read the exact state a tag names — direct resolution, not the T6
-    * as-of rule: a tag IS a snapshot pointer. Manifest-only snapshots
-    * scan their recorded file list; copy snapshots scan their dir. */
-  def readTag(name: String): DataFrame = {
-    val id = tags().getOrElse(name,
-      throw new IllegalArgumentException(s"tag $name does not exist"))
-    val entry = readMeta().withObject("/snapshot").path(id)
-    require(entry.isObject, s"tagged snapshot $id has no meta entry")
-    if (entry.path("manifest_only").asBoolean(false)) {
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      val files = entry.path("files")
-      if (files.isArray) files.forEach(n => buf += n.asText())
-      if (buf.isEmpty) spark.read.parquet(currentPath).limit(0)
-      else SchemaTools.parquetReader(spark, buf.toSeq)
-        .parquet(buf.toSeq: _*)
-    } else SchemaTools.parquetReader(spark, Seq(snapshotPath(id)))
-      .parquet(snapshotPath(id))
-  }
+    * as-of rule: a tag IS a snapshot pointer. */
+  def readTag(name: String): DataFrame =
+    scan(snapshotFiles(tags().getOrElse(name,
+      throw new IllegalArgumentException(s"tag $name does not exist"))))
 
-  /** Resolution rule T6 (`timefly.py:337-352`): first snapshot with
-    * id > t, else current. */
-  def resolveSubpath(asOf: Option[String]): String = asOf match {
-    case None => currentPath
-    case Some(t) =>
+  /** Resolution rule T6 (`timefly.py:337-352`): the first snapshot with
+    * id > t, or None — the live view — when there is none or no `asOf`. */
+  def snapshotAt(asOf: Option[String]): Option[String] =
+    asOf.flatMap { t =>
       val tid = normalizeId(t)
-      availableSnapshots().find(_ > tid) match {
-        case Some(id) => snapshotPath(id)
-        case None => currentPath
-      }
-  }
+      availableSnapshots().find(_ > tid)
+    }
 
   /** Read the dataset as of a point in time. The live (asOf = None)
     * view of a shallow clone is its borrowed base manifest plus the
     * local files — see [[cloneTo]]. */
-  def read(asOf: Option[String] = None): DataFrame = asOf match {
-    case None =>
-      val base = cloneBaseFiles()
-      if (base.isEmpty)
-        SchemaTools.parquetReader(spark, Seq(currentPath))
-          .parquet(currentPath)
-      else {
-        val all = base ++ SchemaTools.listDataFiles(spark, currentPath)
-        SchemaTools.parquetReader(spark, all).parquet(all: _*)
-      }
-    case _ =>
-      SchemaTools.parquetReader(spark, Seq(resolveSubpath(asOf)))
-        .parquet(resolveSubpath(asOf))
+  def read(asOf: Option[String] = None): DataFrame =
+    scan(snapshotAt(asOf).fold(liveFiles())(snapshotFiles))
+
+  /** The live view's files: a shallow clone's borrowed base plus
+    * everything under `current/`. */
+  private def liveFiles(): Seq[String] =
+    cloneBaseFiles() ++ SchemaTools.listDataFiles(spark, currentPath)
+
+  /** The file set snapshot `id` serves: a manifest-only snapshot's
+    * recorded list, or the recursive listing of a copy snapshot's
+    * directory. A snapshot with neither is refused. */
+  private def snapshotFiles(id: String): Seq[String] = {
+    val entry = readMeta().at(s"/snapshot/$id")
+    if (entry.path("manifest_only").asBoolean(false))
+      strings(entry.path("files"))
+    else {
+      require(fs.exists(new Path(snapshotPath(id))),
+        s"snapshot $id does not exist")
+      SchemaTools.listDataFiles(spark, snapshotPath(id))
+    }
   }
 
-  /** Data files added to `current/` since snapshot `sinceId` — the
-    * file-set diff between now and the snapshot's baseline (a
-    * manifest-only snapshot's recorded file list, or a copy snapshot's
-    * directory listing). Under append-family writes (plain appends,
-    * every Delta mode) new rows land ONLY in new files, so this set is
-    * exactly the incremental increment; that is the contract. Rewrites
-    * (overwrite, compaction, RowOps) re-home existing rows into new
-    * files and break increment semantics — consumers re-baseline with a
-    * fresh snapshot after those, the same rule every file-diff CDC
-    * (Iceberg incremental append scan) documents. Both sides are
-    * driver-side listings bounded by file count. */
-  def changedFilesSince(sinceId: String): Seq[String] = {
-    val node = readMeta().withObject("/snapshot")
-    val entry = node.path(sinceId)
-    require(entry.isObject, s"snapshot $sinceId does not exist")
-    val baseline: Set[String] =
-      if (entry.path("manifest_only").asBoolean(false)) {
-        val files = entry.path("files")
-        val buf = scala.collection.mutable.Set[String]()
-        if (files.isArray)
-          files.forEach(n => buf += new Path(n.asText()).getName)
-        buf.toSet
-      } else {
-        val dir = new Path(snapshotPath(sinceId))
-        if (!fs.exists(dir)) Set.empty
-        else fs.listStatus(dir)
-          .filter(s => s.isFile && isDataFile(s))
-          .map(_.getPath.getName).toSet
+  /** The one way a file set becomes a DataFrame. The schema comes from
+    * the files' footers (no inference job when they agree). Files are
+    * grouped by the directory their hive partition path hangs from, and
+    * each group scans with that directory as `basePath`, so partition
+    * columns survive explicit file lists; a view spanning several roots
+    * (a shallow clone's base plus its local files, a branch) is the
+    * union of its groups. An empty set is a zero-row frame with the
+    * live schema. */
+  private def scan(files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.read.parquet(currentPath).limit(0)
+    else files.groupBy(f => tableRoot(new Path(f)).toString).toSeq
+      .sortBy(_._1)
+      .map { case (base, group) =>
+        SchemaTools.parquetReader(spark, group).option("basePath", base)
+          .parquet(group: _*)
       }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+
+  /** Data files added to `current/` since snapshot `sinceId` — the
+    * file-set diff between now and the snapshot's set
+    * ([[snapshotFiles]]), matched by file name. Under append-family
+    * writes (plain appends, every Delta mode) new rows land ONLY in new
+    * files, so this set is exactly the incremental increment; that is
+    * the contract. Rewrites (overwrite, compaction, RowOps) re-home
+    * existing rows into new files and break increment semantics —
+    * consumers re-baseline with a fresh snapshot after those, the same
+    * rule every file-diff CDC (Iceberg incremental append scan)
+    * documents. Both sides are driver-side listings bounded by file
+    * count. */
+  def changedFilesSince(sinceId: String): Seq[String] = {
+    val baseline = snapshotFiles(sinceId).map(new Path(_).getName).toSet
     SchemaTools.listDataFiles(spark, currentPath)
       .filterNot(f => baseline.contains(new Path(f).getName))
   }
@@ -421,14 +420,12 @@ final class TimeFly(spark: SparkSession, root: String) {
   /** Incremental consumption: ONLY the rows added since `sinceId` —
     * a scan over [[changedFilesSince]], never the whole dataset. An
     * empty increment returns an empty frame with the current schema. */
-  def readSince(sinceId: String): DataFrame = {
-    val files = changedFilesSince(sinceId)
-    if (files.isEmpty) spark.read.parquet(currentPath).limit(0)
-    else SchemaTools.parquetReader(spark, files).parquet(files: _*)
-  }
+  def readSince(sinceId: String): DataFrame =
+    scan(changedFilesSince(sinceId))
 
-  def reader(asOf: Option[String] = None): LakeReader =
-    LakeReader(spark, resolveSubpath(asOf))
+  /** Pipeline reader over the live `current/` directory; as-of reads go
+    * through [[read]]. */
+  def reader(): LakeReader = LakeReader(spark, currentPath)
 
   def writer(mode: WriteMode = WriteMode.Append): LakeWriter =
     LakeWriter(spark, currentPath, mode, onWrite = () => notifyDataChange())
@@ -477,21 +474,14 @@ final class TimeFly(spark: SparkSession, root: String) {
   private def branchBaseFiles(name: String): Seq[String] = {
     val entry = readMeta().path("branches").path(name)
     require(entry.isObject, s"branch $name does not exist")
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    val files = entry.path("base_files")
-    if (files.isArray) files.forEach(n => buf += n.asText())
-    buf.toSeq
+    strings(entry.path("base_files"))
   }
 
   /** The branch's view: its base manifest plus everything appended to
     * its local dir. */
-  def readBranch(name: String): DataFrame = {
-    val all =
-      branchBaseFiles(name) ++
-        SchemaTools.listDataFiles(spark, branchPath(name))
-    if (all.isEmpty) spark.read.parquet(currentPath).limit(0)
-    else SchemaTools.parquetReader(spark, all).parquet(all: _*)
-  }
+  def readBranch(name: String): DataFrame =
+    scan(branchBaseFiles(name) ++
+      SchemaTools.listDataFiles(spark, branchPath(name)))
 
   /** Appending writer for the branch's local dir. Append-family by
     * contract: the base files belong to main. */
@@ -520,11 +510,8 @@ final class TimeFly(spark: SparkSession, root: String) {
     val local = SchemaTools.listDataFiles(spark, branchPath(name))
     val moving: Set[String] =
       if (fs.exists(manifestPath)) {
-        val n = mapper.readTree(readText(fs, manifestPath))
-          .asInstanceOf[ObjectNode]
-        val buf = scala.collection.mutable.Set[String]()
-        n.withArray("moving").forEach(x => buf += x.asText())
-        buf.toSet
+        strings(mapper.readTree(readText(fs, manifestPath)).path("moving"))
+          .toSet
       } else {
         val n = mapper.createObjectNode()
         val arr = n.putArray("moving")
@@ -598,24 +585,15 @@ final class TimeFly(spark: SparkSession, root: String) {
     * same job `spark.read.count` runs for any footer-stat count. */
   def history(): DataFrame = {
     import spark.implicits._
+    def count(files: Seq[String]) =
+      if (files.isEmpty) 0L else scan(files).count()
     val snapMeta = readMeta().withObject("/snapshot")
-    val rows = availableSnapshots().zipWithIndex.map { case (id, i) =>
-      val entry = snapMeta.path(id)
-      val mo = entry.path("manifest_only").asBoolean(false)
-      val n =
-        if (mo) {
-          val buf = scala.collection.mutable.ArrayBuffer[String]()
-          val files = entry.path("files")
-          if (files.isArray) files.forEach(x => buf += x.asText())
-          if (buf.isEmpty) 0L else spark.read.parquet(buf.toSeq: _*).count()
-        } else spark.read.parquet(snapshotPath(id)).count()
-      (i.toLong + 1L, false, mo, n)
-    } :+ {
-      val live =
-        cloneBaseFiles() ++ SchemaTools.listDataFiles(spark, currentPath)
-      val n = if (live.isEmpty) 0L else read(None).count()
-      (availableSnapshots().size.toLong + 1L, true, false, n)
-    }
+    val ids = availableSnapshots()
+    val rows = ids.zipWithIndex.map { case (id, i) =>
+      (i.toLong + 1L, false,
+        snapMeta.path(id).path("manifest_only").asBoolean(false),
+        count(snapshotFiles(id)))
+    } :+ ((ids.size.toLong + 1L, true, false, count(liveFiles())))
     rows.toDF("ord", "is_current", "manifest_only", "n_rows")
   }
 
@@ -631,14 +609,9 @@ final class TimeFly(spark: SparkSession, root: String) {
   // the base in, clears the manifest) when the clone must outlive the
   // source's retention.
 
-  private def cloneBaseFiles(): Seq[String] = {
-    if (!exists()) return Nil
-    val entry = readMeta().path("clone").path("base_files")
-    if (!entry.isArray) return Nil
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
-    entry.forEach(n => buf += n.asText())
-    buf.toSeq
-  }
+  private def cloneBaseFiles(): Seq[String] =
+    if (!exists()) Nil
+    else strings(readMeta().at("/clone/base_files"))
 
   /** Create a shallow clone of this dataset (live state, or an `asOf`
     * snapshot view) at `dstRoot`. Returns the clone's TimeFly. */
@@ -647,31 +620,8 @@ final class TimeFly(spark: SparkSession, root: String) {
     val dst = TimeFly(spark, dstRoot)
     require(!dst.exists(), s"$dstRoot already holds a dataset")
     dst.init(name)
-    // asOf resolution must honor MANIFEST-ONLY snapshots: their
-    // snapshotPath has no directory (the files list lives in meta, as
-    // readTag resolves it), so listing the resolved subpath would
-    // silently produce an EMPTY clone. And when the rule falls through
-    // to the live view, a shallow source's borrowed base is part of
-    // that view.
-    val baseFiles = asOf match {
-      case None => cloneBaseFiles() ++
-        SchemaTools.listDataFiles(spark, currentPath)
-      case Some(t) =>
-        val tid = normalizeId(t)
-        availableSnapshots().find(_ > tid) match {
-          case None => cloneBaseFiles() ++
-            SchemaTools.listDataFiles(spark, currentPath)
-          case Some(id) =>
-            val entry = readMeta().withObject("/snapshot").path(id)
-            if (entry.isObject &&
-                entry.path("manifest_only").asBoolean(false)) {
-              val buf = scala.collection.mutable.ArrayBuffer[String]()
-              val files = entry.path("files")
-              if (files.isArray) files.forEach(n => buf += n.asText())
-              buf.toSeq
-            } else SchemaTools.listDataFiles(spark, snapshotPath(id))
-        }
-    }
+    // the clone's base is exactly the file set read(asOf) serves
+    val baseFiles = snapshotAt(asOf).fold(liveFiles())(snapshotFiles)
     val node = dst.readMeta()
     val c = node.withObject("/clone")
     c.put("from", root)
@@ -723,15 +673,23 @@ object TimeFly {
     if (p.getName != "current" || p.getParent == null) return Set.empty
     val tf = new TimeFly(spark, p.getParent.toString)
     if (!tf.exists()) return Set.empty
-    val snap = tf.readMeta().withObject("/snapshot")
-    val out = scala.collection.mutable.Set[String]()
-    val it = snap.properties().iterator()
-    while (it.hasNext) {
-      val v = it.next().getValue
-      if (v.isObject && v.path("manifest_only").asBoolean(false))
-        v.path("files").forEach(f => out += f.asText())
-    }
-    out.toSet
+    tf.readMeta().path("snapshot").elements().asScala
+      .filter(_.path("manifest_only").asBoolean(false))
+      .flatMap(v => strings(v.path("files"))).toSet
+  }
+
+  /** A JSON string array (`files`, `base_files`, snapshot id lists) as
+    * a Seq; empty when the node is absent or not an array. */
+  private def strings(node: JsonNode): Seq[String] =
+    if (node.isArray) node.elements().asScala.map(_.asText()).toSeq
+    else Nil
+
+  /** The directory a data file's hive partition path hangs from: its
+    * parent with every trailing `name=value` directory stripped. */
+  private def tableRoot(file: Path): Path = {
+    var d = file.getParent
+    while (d.getParent != null && d.getName.contains('=')) d = d.getParent
+    d
   }
 
   private[lake] def readText(

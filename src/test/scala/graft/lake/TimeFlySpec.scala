@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -39,9 +40,9 @@ class TimeFlySpec extends AnyFunSuite {
     assert(tf.availableSnapshots() == Seq("20221001_130513"))
     // T6 resolution against the adopted metadata: first snapshot with
     // id > t, else current
-    assert(tf.resolveSubpath(Some("2022-09-15 00:00:00"))
-      == tf.snapshotPath("20221001_130513"))
-    assert(tf.resolveSubpath(Some("2022-11-01 00:00:00")) == tf.currentPath)
+    assert(tf.snapshotAt(Some("2022-09-15 00:00:00"))
+      == Some("20221001_130513"))
+    assert(tf.snapshotAt(Some("2022-11-01 00:00:00")).isEmpty)
     // the translated layout carries the deleted history through
     val meta = tf.readMeta()
     assert(meta.at("/snapshot/deleted").size == 2)
@@ -115,15 +116,14 @@ class TimeFlySpec extends AnyFunSuite {
     tf.writeMeta(node)
 
     // t before both -> FIRST snapshot after t (the earliest one)
-    assert(tf.resolveSubpath(Some("20230101_000000"))
-      .endsWith("snapshot/20240101_000000"))
+    assert(tf.snapshotAt(Some("20230101_000000")) == Some("20240101_000000"))
     // t between -> the later snapshot
-    assert(tf.resolveSubpath(Some("2024-03-01T00:00:00"))
-      .endsWith("snapshot/20240601_000000"))
+    assert(tf.snapshotAt(Some("2024-03-01T00:00:00"))
+      == Some("20240601_000000"))
     // t after all -> current
-    assert(tf.resolveSubpath(Some("20250101_000000")) == tf.currentPath)
+    assert(tf.snapshotAt(Some("20250101_000000")).isEmpty)
     // no as-of -> current
-    assert(tf.resolveSubpath(None) == tf.currentPath)
+    assert(tf.snapshotAt(None).isEmpty)
   }
 
   test("deleteSnapshot moves id to deleted and removes files") {
@@ -152,6 +152,9 @@ class TimeFlySpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(tf.snapshotPath(snap))))
     val files = tf.readMeta().at(s"/snapshot/$snap/files")
     assert(files.size() > 0)
+    // restoring in place would delete files later manifests may pin
+    val e = intercept[IllegalArgumentException] { tf.loadSnapshot(snap) }
+    assert(e.getMessage.contains("manifest-only"))
   }
 
   test("vacuum: dryRun only reports; real run sweeps debris but not " +
@@ -270,7 +273,12 @@ class TimeFlySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { tf.tag("rel_copy", sCopy) }
     intercept[IllegalArgumentException] { tf.tag("20250101_000000", sCopy) }
     intercept[IllegalArgumentException] { tf.tag("x", "19990101_000000") }
-    // current moves on; both tag flavors still serve the old state
+    // an append moves current on; the manifest tag serves its file list
+    tf.writer(WriteMode.Append).write(Seq((3, "c")).toDF("id", "v"))
+    assert(tf.readTag("rel_man").select("id").as[Int].collect().toSeq
+      == Seq(1))
+    // an overwrite moves current on; the copy tag still serves the old
+    // state (the overwrite deletes the files the manifest tag pins)
     tf.writer(WriteMode.Overwrite).write(Seq((2, "b")).toDF("id", "v"))
     assert(tf.readTag("rel_copy").select("id").as[Int].collect().toSeq
       == Seq(1))
@@ -282,6 +290,46 @@ class TimeFlySpec extends AnyFunSuite {
     tf.deleteSnapshot(sCopy)
     assert(!tf.availableSnapshots().contains(sCopy))
     assert(tf.tags() == Map("rel_man" -> sMan))
+  }
+
+  test("every ref serves a hive-partitioned dataset with the live " +
+      "read's columns, partition column included") {
+    val dir = TestSpark.tempDir("tfpart")
+    val tf = TimeFly(spark, dir).init("tp")
+    def write(rows: (Int, String)*): Unit =
+      tf.writer(WriteMode.Append).withPartitioning("p")
+        .write(rows.toDF("id", "p"))
+    write((1, "a"), (2, "b"))
+    val sCopy = tf.addSnapshot()
+    write((3, "a"))
+    val sMan = tf.addSnapshot(manifestOnly = true)
+    write((4, "b"), (5, "c"))
+    val cols = tf.read().columns.toSeq
+    assert(cols.sorted == Seq("id", "p"))
+    def ids(df: DataFrame): Seq[Int] = {
+      assert(df.columns.toSeq == cols)
+      df.select("id").as[Int].collect().sorted.toSeq
+    }
+    assert(ids(tf.read()) == Seq(1, 2, 3, 4, 5))
+    // as-of resolves to the first snapshot with id > t
+    assert(ids(tf.read(Some("19700101_000000"))) == Seq(1, 2))
+    assert(ids(tf.read(Some(sCopy))) == Seq(1, 2, 3))
+    tf.tag("p_copy", sCopy)
+    tf.tag("p_man", sMan)
+    assert(ids(tf.readTag("p_copy")) == Seq(1, 2))
+    assert(ids(tf.readTag("p_man")) == Seq(1, 2, 3))
+    assert(ids(tf.readSince(sCopy)) == Seq(3, 4, 5))
+    assert(ids(tf.readSince(sMan)) == Seq(4, 5))
+    assert(tf.history().orderBy("ord").select("n_rows").as[Long]
+      .collect().toSeq == Seq(2L, 3L, 5L))
+    val cl = tf.cloneTo(TestSpark.tempDir("tfpartcl") + "/c", "c",
+      asOf = Some(sCopy))
+    assert(ids(cl.read()) == Seq(1, 2, 3))
+    // a branch view spans two roots: main's base and the branch's dir
+    tf.branch("b")
+    tf.branchWriter("b").withPartitioning("p")
+      .write(Seq((6, "a")).toDF("id", "p"))
+    assert(ids(tf.readBranch("b")) == Seq(1, 2, 3, 4, 5, 6))
   }
 
   test("vacuumKeepLast keeps exactly the newest n, tagged older " +
