@@ -622,28 +622,29 @@ final class CommitLog(spark: SparkSession, root: String) {
       .getOrElse(spark.emptyDataFrame)
   }
 
-  /** [[read]] with a SQL predicate whose range conjuncts prune the
-    * FILE LISTING. Spans come first from the LOG ITSELF — every
-    * commit carries [[FileSpans]] for its own files (the Delta
+  /** [[read]] with a SQL predicate whose range and equality conjuncts
+    * prune the FILE LISTING. Spans come first from the LOG ITSELF —
+    * every commit carries [[FileSpans]] for its own files (the Delta
     * per-AddFile stats design), so a file is skippable the moment its
     * commit is visible, with no shared-sidecar maintenance for
-    * concurrent writers to contend on — then from the `_stats`
-    * sidecar for legacy files ([[buildStats]]), and files neither
-    * source covers are kept unconditionally. Only span-intersecting
-    * files are scanned, the residual predicate is always re-applied;
-    * conservative under every interleaving because data files are
-    * immutable, so a per-file span can never go stale. Tombstones
-    * still subtract and column mapping still applies (pruning bails
-    * when renames/drops are active — the predicate's logical names
-    * would miss the recorded physical spans). */
+    * concurrent writers to contend on. The `_stats` sidecar
+    * ([[buildStats]]) is consulted — in one read — only for live files
+    * whose commit recorded no spans, or for equality probes on a
+    * bloomed column; files neither source covers are kept. Only
+    * surviving files are scanned and the residual predicate is always
+    * re-applied; conservative under every interleaving because data
+    * files are immutable, so a per-file span can never go stale.
+    * Tombstones still subtract and column mapping still applies
+    * (pruning bails when renames/drops are active — the predicate's
+    * logical names would miss the recorded physical spans). */
   def readFiltered(predicate: String, asOf: Option[Long] = None)
       : DataFrame =
     assembleRead(resolve(asOf), Some(predicate))
 
   /** The data files a [[readFiltered]] scan would list for `predicate`
     * at the latest version — the test-observable pruning surface; None
-    * when nothing can prune (no trusted sidecar, no extractable range,
-    * active column mapping). */
+    * when nothing can prune (no extractable range or probe, no log
+    * span or covering sidecar, active column mapping). */
   def candidateDataFiles(predicate: String): Option[Seq[String]] = {
     val mappingActive = SchemaTools.readSchemaMarkerInfo(spark, root)
       .exists(i => i.renames.nonEmpty || i.dropped.nonEmpty)
@@ -654,76 +655,51 @@ final class CommitLog(spark: SparkSession, root: String) {
     }
   }
 
-  /** Names in `live` surviving the span prune. Two span sources merge,
-    * LOG-CARRIED spans authoritative: a file whose commit recorded
-    * spans ([[FileSpans]] in its manifest) keeps iff every extracted
-    * range bound intersects its span (absent/all-null columns keep —
-    * conservative); a file the log doesn't cover falls back to the
-    * `_stats` sidecar (indexed: keep iff span-intersecting; unindexed:
-    * keep unconditionally). Correct under every interleaving because
-    * data files are immutable — a per-file span can never go stale —
-    * and the log-carried source needs NO shared maintenance at all:
-    * each writer's spans ride its own atomic commit. None when nothing
-    * can prune (no extractable range, or neither source has a span
-    * for any file). */
   private def prunedLive(predicate: String, live: Seq[String],
-      spanOf: Map[String, FileSpans]): Option[Seq[String]] = {
-    val base = prunedLiveBounds(FileStats.typedBounds(spark, predicate),
-      live, spanOf)
-    // bloom point-lookup skipping INTERSECTS the span surface: blooms
-    // live in the sidecar only (a blob per file would bloat every
-    // commit manifest), so files the sidecar has no row for keep —
-    // both surfaces are conservative, so intersecting stays correct
-    // under every interleaving
-    val keep = FileStats.bloomCandidates(spark, root,
-      FileStats.eqProbes(spark, predicate))
-      .map(_.map(f => new Path(f).getName).toSet)
-    val idx = if (keep.isEmpty) None
-      else FileStats.indexedFiles(spark, root)
-        .map(_.map(f => new Path(f).getName).toSet)
-    (keep, idx) match {
-      case (Some(k), Some(i)) =>
-        Some(base.getOrElse(live).filter { n =>
-          val leaf = new Path(n).getName
-          !i.contains(leaf) || k.contains(leaf)
-        })
-      case _ => base
-    }
-  }
+      spanOf: Map[String, FileSpans]): Option[Seq[String]] =
+    prunedLive(FileStats.typedBounds(spark, predicate),
+      FileStats.eqProbes(spark, predicate), live, spanOf)
 
-  /** [[prunedLive]] for already-typed bounds — the shape key-range
-    * pruning ([[doUpsert]]'s batch spread) probes with directly. */
-  private def prunedLiveBounds(bounds: Map[String, FileStats.ColBound],
-      live: Seq[String],
+  /** Names in `live` surviving range `bounds` and bloom probes `eqs`.
+    * LOG-CARRIED spans are authoritative: a file whose commit recorded
+    * spans ([[FileSpans]]) is range-judged by the log alone, kept iff
+    * every bound intersects its span (absent/all-null columns keep). A
+    * file the log doesn't cover falls back to the `_stats` sidecar's
+    * spans (indexed: keep iff span-intersecting; unindexed: keep).
+    * Blooms live in the sidecar only (a blob per file would bloat every
+    * commit manifest) and intersect the range verdict of every file the
+    * sidecar indexes. The sidecar is READ — once, lazily — only when a
+    * live file lacks log spans or a probed column carries a bloom.
+    * Correct under every interleaving because data files are immutable
+    * — a per-file span can never go stale — and the log-carried source
+    * needs NO shared maintenance: each writer's spans ride its own
+    * atomic commit. None when nothing can prune (no extractable bound
+    * or probe, or neither source covers any file). */
+  private def prunedLive(bounds: Map[String, FileStats.ColBound],
+      eqs: Map[String, Seq[Seq[FileStats.EqProbe]]], live: Seq[String],
       spanOf: Map[String, FileSpans]): Option[Seq[String]] = {
-    if (bounds.isEmpty) return None
-    val sidecar: Option[(Set[String], Set[String])] =
-      if (!FileStats.trusted(spark, root)) None
-      else for {
-        cands <- FileStats.candidatesForColBounds(spark, root, bounds)
-        indexed <- FileStats.indexedFiles(spark, root)
-      } yield (cands.map(f => new Path(f).getName).toSet,
-        indexed.map(f => new Path(f).getName).toSet)
-    if (spanOf.isEmpty && sidecar.isEmpty) return None
-    def logKeeps(sp: FileSpans): Boolean =
-      bounds.forall { case (c, b) =>
-        sp.cols.get(c) match {
-          case Some((mn, mx)) => FileStats.spanIntersects(mn, mx, b)
-          case None => true // unindexed column: keep
-        }
-      }
+    if (bounds.isEmpty && eqs.isEmpty) return None
+    val side = FileStats.probe(spark, root, bounds, eqs)
+    val byBlooms = side.exists(_.prunesBlooms)
+    if (!byBlooms && (bounds.isEmpty ||
+        spanOf.isEmpty && !side.exists(_.prunesSpans))) return None
+    // sidecar rows key by absolute path; compare LEAF names (task-file
+    // names are UUID-unique), which also keeps the match alive for
+    // partition-qualified relative names
+    def leaves(fs: Seq[String]) = fs.map(f => new Path(f).getName).toSet
+    lazy val indexed = side.fold(Set.empty[String])(p => leaves(p.indexed))
+    lazy val kept = leaves(side.get.kept)
+    lazy val bloomKept = leaves(side.get.bloomKept)
+    def logKeeps(sp: FileSpans): Boolean = bounds.forall { case (c, b) =>
+      sp.cols.get(c).forall { case (mn, mx) =>
+        FileStats.spanIntersects(mn, mx, b) }
+    }
     Some(live.filter { n =>
+      lazy val leaf = new Path(n).getName
       spanOf.get(n) match {
-        case Some(sp) => logKeeps(sp)
-        case None => sidecar match {
-          // sidecar rows key by absolute path; compare LEAF names
-          // (task-file names are UUID-unique), which also keeps the
-          // match alive for partition-qualified relative names
-          case Some((cand, idx)) =>
-            val leaf = new Path(n).getName
-            !idx.contains(leaf) || cand.contains(leaf)
-          case None => true
-        }
+        case Some(sp) => logKeeps(sp) &&
+          (!byBlooms || !indexed(leaf) || bloomKept(leaf))
+        case None => !indexed(leaf) || kept(leaf)
       }
     })
   }
@@ -2545,7 +2521,7 @@ final class CommitLog(spark: SparkSession, root: String) {
     val keyBounds: Map[String, FileStats.ColBound] =
       FileStats.frameBounds(batchAligned, physKeys)
     val candidates =
-      prunedLiveBounds(keyBounds, r.data, r.spanOf).getOrElse(r.data)
+      prunedLive(keyBounds, Map.empty, r.data, r.spanOf).getOrElse(r.data)
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
       else {
@@ -2963,7 +2939,7 @@ final class CommitLog(spark: SparkSession, root: String) {
       FileStats.frameBounds(source, keys)
     val keyCandidates: Seq[String] =
       if (r.data.isEmpty) Nil
-      else prunedLiveBounds(keyBounds, r.data, r.spanOf).getOrElse(r.data)
+      else prunedLive(keyBounds, Map.empty, r.data, r.spanOf).getOrElse(r.data)
     val emptyT = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), eSchema)
     // a target row matched by >1 source rows is nondeterministic when

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
   * the (filtered) dim side's join-key domain — per-key min/max always,
   * the exact distinct value set when it is provably small — and prune
   * the fact's FILE LISTING through the same span + bloom surface
-  * ad-hoc predicates use ([[FileStats.candidatesForColBounds]] /
-  * [[FileStats.bloomCandidates]]). Static skipping serves predicates
+  * ad-hoc predicates use (one [[FileStats.probe]] judging spans and
+  * blooms in a single sidecar read). Static skipping serves predicates
   * whose literals exist at plan time; this serves the predicate that
   * only exists at RUN time — the dim rows that survived their own
   * filter — which is where star-schema scans win or lose at 100 TB: a
@@ -177,16 +177,10 @@ object DynamicPruning {
       else {
         val bounds = doms.filter(!_.bound.isEmpty)
           .map(d => d.factCol -> d.bound).toMap
-        val spans =
-          if (bounds.isEmpty) None
-          else FileStats.candidatesForColBounds(spark, factPath, bounds)
         val probeMap = doms.flatMap(d =>
           d.probes.map(ps => d.factCol -> Seq(ps))).toMap
-        val blooms =
-          FileStats.bloomCandidates(spark, factPath, probeMap,
-            within = spans)
-        blooms.orElse(spans).map(reader.scanFiles)
-          .getOrElse(reader.load())
+        FileStats.probe(spark, factPath, bounds, probeMap)
+          .map(p => reader.scanFiles(p.kept)).getOrElse(reader.load())
       }
     doms.flatMap(_.residual).foldLeft(base)(_ filter _)
   }

@@ -330,76 +330,121 @@ object FileStats {
     acc.view.mapValues(_.reverse.toSeq).toMap
   }
 
-  /** Files surviving the bloom probes, among the sidecar's rows — the
-    * equality analog of [[candidatesForColBounds]]. None when no
-    * trusted manifest exists or no probed column carries a bloom.
-    * Null blobs keep; a probe value with no canonical form in the
+  /** One read of a trusted sidecar for a probe. Its conditions are
+    * planned from the sidecar's footer schema on the driver (no job);
+    * its rows — per indexed file, whether the range spans and whether
+    * the blooms keep it — are collected once, on first use. Null spans
+    * and null blobs keep; a probe value with no canonical form in the
     * blob's domain keeps (no proof possible). */
+  final class SidecarProbe private[FileStats] (stats: DataFrame,
+      spanCond: Option[Column], bloomCond: Option[Column]) {
+    /** Some bounded column carries a span in the sidecar. */
+    def prunesSpans: Boolean = spanCond.isDefined
+    /** Some probed column carries a bloom in the sidecar. */
+    def prunesBlooms: Boolean = bloomCond.isDefined
+    private lazy val rows: Seq[(String, Boolean, Boolean)] = {
+      // a missing condition keeps; a null verdict drops, as in a filter
+      def verdict(c: Option[Column]) =
+        coalesce(c.getOrElse(lit(true)), lit(false))
+      stats.select(col("file"), verdict(spanCond), verdict(bloomCond))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)))
+    }
+    /** Every file the sidecar has a row for. */
+    def indexed: Seq[String] = rows.map(_._1)
+    /** The files both the spans and the blooms keep. */
+    def kept: Seq[String] = rows.collect { case (f, true, true) => f }
+    /** The files the blooms keep, whatever their spans say. */
+    def bloomKept: Seq[String] = rows.collect { case (f, _, true) => f }
+  }
+
+  /** The sidecar at `path` planned for range `bounds` and equality
+    * probes `eqs` — None without a trusted manifest. Names resolve
+    * against the sidecar case-insensitively, matching Spark's default
+    * resolution. Each bounded column probes in the domain its span was
+    * stored in (doubles for numeric/timestamp/date, prefix strings for
+    * strings); bounds with no side in that domain, and columns the
+    * sidecar doesn't cover, contribute nothing (their conjuncts stay
+    * residual-only). */
+  private def open(spark: SparkSession, path: String,
+      bounds: Map[String, ColBound],
+      eqs: Map[String, Seq[Seq[EqProbe]]]): Option[SidecarProbe] = {
+    if (!trusted(spark, path)) return None
+    val stats = SchemaTools.parquetReader(spark, Seq(dir(path).toString))
+      .parquet(dir(path).toString)
+    def covered(suffix: String): Map[String, String] =
+      stats.columns.filter(_.endsWith(suffix)).map(_.stripSuffix(suffix))
+        .map(c => c.toLowerCase(java.util.Locale.ROOT) -> c).toMap
+    def lookup(m: Map[String, String], c: String) =
+      m.get(c.toLowerCase(java.util.Locale.ROOT))
+    val spanned = covered("_min")
+    val spanConds = bounds.toSeq.flatMap { case (c0, b) =>
+      lookup(spanned, c0).flatMap { c =>
+        val mnC = col(s"${c}_min")
+        val mxC = col(s"${c}_max")
+        val sides: Seq[Column] =
+          stats.schema(s"${c}_min").dataType match {
+            case StringType =>
+              b.loStr.map(lo => mxC >= lit(truncProbe(lo))).toSeq ++
+                b.hiStr.map(hi => mnC <= lit(hi)).toSeq
+            case _ =>
+              b.loNum.map(lo => mxC >= lit(lo)).toSeq ++
+                b.hiNum.map(hi => mnC <= lit(hi)).toSeq
+          }
+        if (sides.isEmpty) None
+        else Some(mnC.isNull || mxC.isNull || sides.reduce(_ && _))
+      }
+    }
+    val bloomed = covered("_bloom")
+    val bloomConds = eqs.toSeq.flatMap { case (c0, groups) =>
+      lookup(bloomed, c0).map { c =>
+        udf((blob: Array[Byte]) =>
+          blob == null || blob.length < 2 || groups.forall(g =>
+            g.exists(p => p.forDomain(blob(0)) match {
+              case Some(v) => bloomMightContain(blob, v)
+              case None => true
+            }))).apply(col(s"${c}_bloom"))
+      }
+    }
+    Some(new SidecarProbe(stats, spanConds.reduceOption(_ && _),
+      bloomConds.reduceOption(_ && _)))
+  }
+
+  /** The ONE sidecar pass every pruning surface below projects: range
+    * spans and bloom point lookups, judged in a single read. None when
+    * no trusted sidecar covers a bounded or probed column — decided
+    * from its footer schema, without reading it. */
+  def probe(spark: SparkSession, path: String,
+      bounds: Map[String, ColBound],
+      eqs: Map[String, Seq[Seq[EqProbe]]]): Option[SidecarProbe] =
+    open(spark, path, bounds, eqs)
+      .filter(p => p.prunesSpans || p.prunesBlooms)
+
+  /** Files surviving the bloom probes, among the sidecar's rows (and
+    * among `within`, when given) — the equality analog of
+    * [[candidatesForColBounds]]. None when no trusted manifest exists
+    * or no probed column carries a bloom. */
   def bloomCandidates(
       spark: SparkSession,
       path: String,
       probes: Map[String, Seq[Seq[EqProbe]]],
       within: Option[Seq[String]] = None
-  ): Option[Seq[String]] = {
-    if (probes.isEmpty || !trusted(spark, path)) return None
-    if (within.exists(_.isEmpty)) return Some(Nil)
-    val all = SchemaTools.parquetReader(spark, Seq(dir(path).toString))
-      .parquet(dir(path).toString)
-    val byLower = all.columns.filter(_.endsWith("_bloom"))
-      .map(c => c.stripSuffix("_bloom"))
-      .map(c => c.toLowerCase(java.util.Locale.ROOT) -> c).toMap
-    val probed: Seq[(String, Seq[Seq[EqProbe]])] =
-      probes.toSeq.flatMap { case (c0, groups) =>
-        byLower.get(c0.toLowerCase(java.util.Locale.ROOT))
-          .map(_ -> groups)
-      }
-    if (probed.isEmpty) return None
-    // read ONLY the probed blob columns (+ file) — parquet column
-    // pruning keeps every other column's blobs on disk — and ONLY
-    // the span-surviving rows: a small survivor set pushes into the
-    // scan as an IN filter (row-group skipping on the sharded
-    // manifest), a large one goes through a broadcast semi-join.
-    var stats = all.select(
-      (col("file") +: probed.map(p => col(s"${p._1}_bloom"))): _*)
-    within.foreach { w =>
-      if (w.size <= 1000) stats = stats.filter(col("file").isin(w: _*))
-      else {
-        import spark.implicits._
-        stats = stats.join(
-          broadcast(w.toDF("file")), Seq("file"), "left_semi")
-      }
-    }
-    val conds = probed.map { case (c, groups) =>
-      val keep = udf((blob: Array[Byte]) =>
-        blob == null || blob.length < 2 || groups.forall(g =>
-          g.exists(p => p.forDomain(blob(0)) match {
-            case Some(v) => bloomMightContain(blob, v)
-            case None => true
-          })))
-      keep(col(s"${c}_bloom"))
-    }
-    Some(stats.filter(conds.reduce(_ && _)).select("file")
-      .collect().map(_.getString(0)).toSeq)
-  }
+  ): Option[Seq[String]] =
+    if (probes.isEmpty || !trusted(spark, path)) None
+    else if (within.exists(_.isEmpty)) Some(Nil)
+    else probe(spark, path, Map.empty, probes)
+      .map(p => within.fold(p.kept)(w => p.kept.filter(w.toSet)))
 
-  /** The full pruning surface for a SQL predicate in ONE call: range
-    * spans ([[typedBounds]] × [[candidatesForColBounds]]) intersected
-    * with bloom point-lookup candidates ([[eqProbes]] ×
-    * [[bloomCandidates]]). None when neither surface can prune. */
+  /** The full pruning surface for a SQL predicate in ONE sidecar read:
+    * range spans ([[typedBounds]]) intersected with bloom point-lookup
+    * probes ([[eqProbes]]). None when neither surface can prune. */
   def candidatesForPredicate(
       spark: SparkSession,
       path: String,
       predicate: String
-  ): Option[Seq[String]] = {
-    val fromBounds =
-      candidatesForColBounds(spark, path, typedBounds(spark, predicate))
-    // blooms probe ONLY the span-surviving rows (the `within` set):
-    // the result is already the intersection, and the probe's blob
-    // read shrinks with the spans' selectivity
-    val fromBlooms = bloomCandidates(
-      spark, path, eqProbes(spark, predicate), within = fromBounds)
-    fromBlooms.orElse(fromBounds)
-  }
+  ): Option[Seq[String]] =
+    probe(spark, path, typedBounds(spark, predicate),
+      eqProbes(spark, predicate)).map(_.kept)
 
   private def dir(datasetPath: String) = new Path(datasetPath, "_stats")
   private def manifest(datasetPath: String) =
@@ -743,12 +788,8 @@ object FileStats {
     * membership here is what lets a manifest-resolved reader prune
     * "indexed files by span, unindexed files kept" conservatively. */
   def indexedFiles(spark: SparkSession, path: String)
-      : Option[Seq[String]] = {
-    if (!trusted(spark, path)) return None
-    Some(SchemaTools.parquetReader(spark, Seq(dir(path).toString))
-      .parquet(dir(path).toString)
-      .select("file").collect().map(_.getString(0)).toSeq)
-  }
+      : Option[Seq[String]] =
+    open(spark, path, Map.empty, Map.empty).map(_.indexed)
 
   /** Per-file row counts from the manifest: (file, n_rows), None when
     * no trusted sidecar exists or it predates the `n_rows` column. */
@@ -912,50 +953,18 @@ object FileStats {
         hiNum = Some(hi).filter(_ != Double.PositiveInfinity))
     })
 
-  /** Multi-column candidate resolution in ONE stats read: files whose
-    * span intersects EVERY given bound — the conjunction prunes on
-    * each covered column independently, which is exactly what a
-    * z-ordered layout (narrow per-file spans on every clustered column)
-    * is built to serve. Each column probes in the domain its sidecar
-    * span was stored in (doubles for numeric/timestamp/date, prefix
-    * strings for strings); bounds with no side in that domain — and
-    * columns the manifest doesn't cover — contribute nothing (their
-    * conjuncts stay residual-only). None when no trusted manifest
+  /** Multi-column candidate resolution: files whose span intersects
+    * EVERY given bound — the conjunction prunes on each covered column
+    * independently, which is exactly what a z-ordered layout (narrow
+    * per-file spans on every clustered column) is built to serve. The
+    * range projection of [[probe]]: None when no trusted manifest
     * exists or no covered column has a usable bound. */
   def candidatesForColBounds(
       spark: SparkSession,
       path: String,
       bounds: Map[String, ColBound]
-  ): Option[Seq[String]] = {
-    if (!trusted(spark, path)) return None
-    val stats = SchemaTools.parquetReader(spark, Seq(dir(path).toString))
-      .parquet(dir(path).toString)
-    // resolve requested names against the manifest case-insensitively,
-    // matching Spark's default resolution
-    val byLower = stats.columns.filter(_.endsWith("_min"))
-      .map(c => c.stripSuffix("_min"))
-      .map(c => c.toLowerCase(java.util.Locale.ROOT) -> c).toMap
-    val conds = bounds.toSeq.flatMap { case (c0, b) =>
-      byLower.get(c0.toLowerCase(java.util.Locale.ROOT)).flatMap { c =>
-        val mnC = col(s"${c}_min")
-        val mxC = col(s"${c}_max")
-        val sides: Seq[Column] =
-          stats.schema(s"${c}_min").dataType match {
-            case StringType =>
-              b.loStr.map(lo => mxC >= lit(truncProbe(lo))).toSeq ++
-                b.hiStr.map(hi => mnC <= lit(hi)).toSeq
-            case _ =>
-              b.loNum.map(lo => mxC >= lit(lo)).toSeq ++
-                b.hiNum.map(hi => mnC <= lit(hi)).toSeq
-          }
-        if (sides.isEmpty) None
-        else Some(mnC.isNull || mxC.isNull || sides.reduce(_ && _))
-      }
-    }
-    if (conds.isEmpty) return None
-    Some(stats.filter(conds.reduce(_ && _)).select("file")
-      .collect().map(_.getString(0)).toSeq)
-  }
+  ): Option[Seq[String]] =
+    probe(spark, path, bounds, Map.empty).map(_.kept)
 
   /** Typed per-column bounds for a frame's OWN values (one agg over
     * `frame`): the probe shape key-range pruning wants — a merge

@@ -99,7 +99,7 @@ final case class LakeReader(
     * extractable range — the caller falls back to the plain scan. */
   private def statsPrunedScan(predicate: String): Option[DataFrame] = {
     if (!listingPrunable) return None
-    // range spans AND bloom point-lookup probes, one combined listing
+    // range spans AND bloom point-lookup probes, one sidecar read
     FileStats.candidatesForPredicate(spark, path, predicate)
       .map(scanFiles)
   }

@@ -2114,4 +2114,75 @@ class CommitLogSpec extends AnyFunSuite {
         "sizedSource temp dirs must not accumulate")
     } finally s2.listenerManager.unregister(listener)
   }
+
+  test("mixed span coverage under a trusted bloom sidecar: log-spanned " +
+      "and legacy files prune to the exact expected sets; readFiltered " +
+      "== read().filter for every probe shape") {
+    val (log, band) = CommitLogSpec.mixedCoverage(spark)
+    val r = log.resolve(None)
+    assert(r.data.count(r.spanOf.contains) == 2 && r.data.size == 4,
+      "fixture must mix two log-spanned and two legacy files")
+    val u250 = CommitLogSpec.uOf(250)
+    val cases: Seq[(String, Option[Set[Long]])] = Seq(
+      "id = 150" -> Some(Set(100L)), // point hit, legacy file
+      "id = 1000" -> Some(Set.empty[Long]), // point miss
+      "id IN (5, 350)" -> Some(Set(0L, 300L)), // blooms cut the envelope
+      "id BETWEEN 120 AND 260" -> Some(Set(100L, 200L)), // range
+      s"u = '$u250'" -> Some(Set(200L)), // string equality: blooms only
+      "flag = true" -> None, // unindexed column
+      "id % 7 = 3" -> None) // no extractable range
+    cases.foreach { case (p, want) =>
+      assert(log.candidateDataFiles(p).map(_.toSet) ==
+        want.map(_.map(band)), s"candidates for `$p`")
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.select("id").as[Long].collect().sorted.toSeq
+      assert(ids(log.readFiltered(p)) == ids(log.read().filter(expr(p))),
+        s"readFiltered must equal read().filter for `$p`")
+    }
+  }
+}
+
+object CommitLogSpec {
+  /** The hash-interleaved string key of row `id`: every file's `u` span
+    * covers nearly the whole domain, so only blooms isolate a value. */
+  def uOf(id: Long): String = s"u${id * 7919L % 100000L}"
+
+  /** A commit-log table whose live files are partly log-spanned and
+    * partly legacy-shaped, under a trusted sidecar with blooms on `id`
+    * and `u`. Four single-file appends hold id bands 0-99, 100-199,
+    * 200-299 and 300-399; the second and fourth commits have their
+    * recorded stats stripped in place (a legacy writer records none),
+    * the fourth after it landed under the standing sidecar, which
+    * indexed it incrementally. Returns the log and each band's data
+    * file by the band's first id. */
+  def mixedCoverage(spark: org.apache.spark.sql.SparkSession)
+      : (CommitLog, Map[Long, String]) = {
+    val dir = TestSpark.tempDir("clogmix")
+    val log = CommitLog(spark, dir).init()
+    def band(lo: Long) = log.append(spark.range(lo, lo + 100)
+      .select(col("id"),
+        concat(lit("u"), pmod(col("id") * 7919L, lit(100000L))).as("u"),
+        (col("id") % 2 === 0).as("flag"))
+      .coalesce(1))
+    def stripStats(v: Long): Unit = {
+      val vf = new org.apache.hadoop.fs.Path(dir, f"_commits/v$v%020d.json")
+      val fs = vf.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val node = mapper.readTree(TimeFly.readText(fs, vf))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.remove("stats")
+      fs.delete(vf, false)
+      val out = fs.create(vf, true)
+      try out.write(mapper.writeValueAsBytes(node)) finally out.close()
+      log.invalidateCaches() // the shim broke manifest immutability
+    }
+    val vs = Seq(0L, 100L, 200L).map(lo => lo -> band(lo))
+    stripStats(vs(1)._2)
+    log.buildStats(bloomCols = Seq("id", "u"), bloomBits = 1 << 13)
+    val v4 = band(300L)
+    stripStats(v4)
+    assert(FileStats.trusted(spark, dir), "the sidecar must stand")
+    (log, (vs :+ (300L -> v4)).map { case (lo, v) =>
+      lo -> log.commit(v).files.head }.toMap)
+  }
 }

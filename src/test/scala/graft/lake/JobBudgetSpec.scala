@@ -1,0 +1,120 @@
+package graft.lake
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** Deterministic ceilings on the Spark jobs a lake verb spends, so a
+  * cost regression shows without a timing run. A listener records every
+  * job the measured call starts (tagged through a thread-local property,
+  * which SQL executions carry to their pool threads, so other threads'
+  * jobs never count) under the call site Spark names it by. A "sidecar
+  * job" is a `collect` issued from FileStats.scala: one read of the
+  * `_stats` sidecar by a prune.
+  *
+  * Ceilings may only be tightened. Raising one needs its cause written
+  * in CHANGES.md.
+  */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val Tag = "graft.jobBudget"
+
+  /** The call sites of the jobs `f` starts. */
+  private def jobSites(f: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val sites = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Tag) == tag))
+          sites.add(e.stageInfos.sortBy(-_.stageId).headOption
+            .map(_.name).getOrElse(""))
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(Tag, tag)
+    try { f; TestBus.drain(sc) }
+    finally {
+      sc.setLocalProperty(Tag, null)
+      sc.removeSparkListener(listener)
+    }
+    sites.asScala.toSeq
+  }
+
+  private def sidecarJobs(sites: Seq[String]): Int =
+    sites.count(_.startsWith("collect at FileStats.scala"))
+
+  /** Three single-file appends of contiguous id bands, every file
+    * log-spanned, under a trusted sidecar with a bloom on `id`. */
+  private def spannedLog(prefix: String): CommitLog = {
+    val dir = TestSpark.tempDir(prefix)
+    val log = CommitLog(spark, dir).init()
+    Seq(0L, 100L, 200L).foreach(lo => log.append(spark.range(lo, lo + 100)
+      .select(col("id"), (col("id") * 3).as("x")).coalesce(1)))
+    log.buildStats(bloomCols = Seq("id"), bloomBits = 1 << 13)
+    val r = log.resolve(None)
+    assert(r.data.forall(r.spanOf.contains) &&
+      FileStats.trusted(spark, dir), "fixture: all spanned, trusted")
+    log
+  }
+
+  test("readFiltered / candidateDataFiles planning on a fully " +
+      "log-spanned table: 0 jobs for a range, 1 for a point probe") {
+    val log = spannedLog("jbspan")
+    val range = "id BETWEEN 110 AND 120"
+    val point = "id = 150"
+    assert(jobSites(log.candidateDataFiles(range)).isEmpty)
+    assert(jobSites(log.candidateDataFiles(point)).size <= 1)
+    assert(sidecarJobs(jobSites(log.readFiltered(range))) == 0)
+    assert(sidecarJobs(jobSites(log.readFiltered(point))) <= 1)
+    assert(log.candidateDataFiles(point).map(_.size).contains(1))
+  }
+
+  test("mixed span coverage: one sidecar job per prune") {
+    val (log, _) = CommitLogSpec.mixedCoverage(spark)
+    Seq("id BETWEEN 120 AND 260", "id = 150", "id IN (5, 350)")
+      .foreach { p =>
+        assert(sidecarJobs(jobSites(log.candidateDataFiles(p))) <= 1, p)
+        assert(sidecarJobs(jobSites(log.readFiltered(p))) <= 1, p)
+      }
+  }
+
+  test("an upsert's candidate pruning reads no sidecar") {
+    val log = spannedLog("jbups")
+    val batch = spark.range(150, 160)
+      .select(col("id"), (col("id") * 5).as("x"))
+    assert(sidecarJobs(jobSites(log.upsert(batch, Seq("id")))) == 0)
+    assert(log.read().filter($"id" === 155).select("x").as[Long]
+      .collect().toSeq == Seq(775L))
+  }
+
+  test("LakeReader.filter(...).load() over a trusted sidecar: one " +
+      "sidecar job") {
+    val dir = TestSpark.tempDir("jblr") + "/ds"
+    spark.range(400).select(col("id"), (col("id") % 7).as("v"))
+      .repartitionByRange(4, col("id")).write.parquet(dir)
+    FileStats.build(spark, dir, bloomCols = Seq("id"))
+    val reader = LakeReader(spark, dir).filter("id = 150")
+    assert(sidecarJobs(jobSites(reader.load())) <= 1)
+    assert(reader.load().inputFiles.length == 1)
+  }
+
+  test("DynamicPruning.prunedFactScan: one sidecar job") {
+    val dir = TestSpark.tempDir("jbdfp") + "/fact"
+    spark.range(2000).select(col("id").as("k"), (col("id") % 97).as("v"))
+      .repartitionByRange(8, col("k")).write.parquet(dir)
+    FileStats.build(spark, dir, bloomCols = Seq("k"))
+    val dim = Seq(120L, 130L, 1800L).toDF("dk")
+    assert(sidecarJobs(jobSites(DynamicPruning.prunedFactScan(
+      spark, dir, dim, Seq("k" -> "dk")))) <= 1)
+  }
+}
