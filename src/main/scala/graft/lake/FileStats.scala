@@ -567,21 +567,14 @@ object FileStats {
     })
     if (!eligible || paths.isEmpty) return None
     val conf = spark.sessionState.newHadoopConf()
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.max(1, math.min(16, paths.size)))
-    implicit val ec: ExecutionContext =
-      ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = paths.map(p => Future(p -> footerSpansOf(p, fields, conf)))
-      Some(Await.result(Future.sequence(futs), Duration.Inf).toMap)
-    } catch {
+    try Some(SchemaTools.onFooterPool(paths)(p =>
+      p -> footerSpansOf(p, fields, conf)).toMap)
+    catch {
       case scala.util.control.NonFatal(e) =>
         if (sys.env.contains("GRAFT_FOOTER_DEBUG"))
           System.err.println(s"[footer-spans] fallback: $e")
         None
-    } finally pool.shutdown()
+    }
   }
 
   /** Footer ineligibility — triggers the whole-batch fallback. */

@@ -60,12 +60,13 @@ final case class KeySidecar(spark: SparkSession, datasetPath: String) {
       finally in.close()
     }
 
-  /** The trusted key frame for `d`, or None when the sidecar is
-    * missing, dirty (no trust marker), or doesn't store `d`'s columns.
-    * A sidecar built for a key superset still serves a subset config:
-    * projecting fewer columns + the reader's own distinct() yields
-    * exactly the key set present in the data. */
-  def readFor(d: WriteMode.Delta): Option[DataFrame] = {
+  /** The trusted key frame for `d` and whether it is distinct on
+    * `d.subset` (the sidecar stores distinct tuples, so exactly when it
+    * stores just `d.subset`); None when the sidecar is missing, dirty
+    * (no trust marker), or doesn't store `d`'s columns. A superset
+    * sidecar still serves a subset config: projecting fewer columns +
+    * the reader's own distinct() yields exactly the data's key set. */
+  def readFor(d: WriteMode.Delta): Option[(DataFrame, Boolean)] = {
     if (d.subset.isEmpty) return None // full-row diff needs all columns
     if (!fs.exists(manifestPath)) return None
     readCols(colsPath).flatMap { stored =>
@@ -75,7 +76,7 @@ final case class KeySidecar(spark: SparkSession, datasetPath: String) {
         scala.util.Try(
           SchemaTools.parquetReader(spark, Seq(dir.toString))
             .parquet(dir.toString).select(need.map(col): _*)
-        ).toOption
+        ).toOption.map(_ -> (stored == d.subset))
     }
   }
 
@@ -134,8 +135,10 @@ final case class KeySidecar(spark: SparkSession, datasetPath: String) {
         batchScan.getOrElse(
             spark.read.option("basePath", datasetPath)
               .parquet(newFiles: _*))
-          .select(stored.get.map(col): _*).distinct()
-          .repartition(1)
+          .select(stored.get.map(col): _*)
+          // one shuffle: the single partition already satisfies the
+          // distinct's required distribution
+          .repartition(1).distinct()
           .write.mode("append").parquet(dir.toString)
       }
       writeJson(manifestPath, stored.get)
@@ -164,13 +167,14 @@ final case class KeySidecar(spark: SparkSession, datasetPath: String) {
       val tmp = new Path(datasetPath, "_keys_tmp")
       // output sized by the sidecar's on-disk bytes, ~64 MB per file —
       // a billion-key sidecar folds to a handful of right-sized files,
-      // not shuffle.partitions-many shards
+      // not shuffle.partitions-many shards; hashing on every stored
+      // column is also the distinct's distribution, so one shuffle
       val bytes = fs.listStatus(dir).filter(_.isFile).map(_.getLen).sum
       val nOut = math.max(1L, bytes / (64L << 20)).toInt
       markDirty()
       SchemaTools.parquetReader(spark, Seq(dir.toString))
-        .parquet(dir.toString).distinct()
-        .repartition(nOut)
+        .parquet(dir.toString)
+        .repartition(nOut, stored.map(col): _*).distinct()
         .write.mode("overwrite").parquet(tmp.toString)
       fs.delete(dir, true)
       fs.rename(tmp, dir)

@@ -121,14 +121,11 @@ final case class LakeReader(
   /** Scan exactly `files` under this dataset's schema + basePath; an
     * empty candidate set keeps the schema (zero-file proof, not an
     * error). Sound only under [[listingPrunable]]. */
-  private[lake] def scanFiles(files: Seq[String]): DataFrame =
-    if (files.isEmpty) spark.read.parquet(path).limit(0)
-    else
-      spark.read
-        .schema(SchemaTools.flatUniformSchema(spark, Seq(path))
-          .getOrElse(spark.read.parquet(path).schema))
-        .option("basePath", path)
-        .parquet(files: _*)
+  private[lake] def scanFiles(files: Seq[String]): DataFrame = {
+    val reader = SchemaTools.parquetReader(spark, Seq(path))
+    if (files.isEmpty) reader.parquet(path).limit(0)
+    else reader.option("basePath", path).parquet(files: _*)
+  }
 
   private def loadBase(): DataFrame = {
     format match {

@@ -176,8 +176,9 @@ final case class LakeWriter(
     * per-batch existing-side scan from O(lake) into O(distinct keys). */
   private def deltaDiff(df: DataFrame, d: WriteMode.Delta): DataFrame = {
     if (!targetHasData) return df
-    val (existing, fromPath) = existingKeysSideTagged(d)
-    deltaDiffAgainst(df, d, existing, windowSpanServe = fromPath)
+    val (existing, fromPath, distinctKeys) = existingKeysSideTagged(d)
+    deltaDiffAgainst(df, d, existing, windowSpanServe = fromPath,
+      existingDistinct = distinctKeys)
   }
 
   /** The frame the exact-key anti-join reads: the key-manifest sidecar
@@ -187,12 +188,13 @@ final case class LakeWriter(
 
   /** [[existingKeysSide]] plus whether the frame is the RAW PATH SCAN
     * (no sidecar served) — the only case the delta window bound may be
-    * re-issued as a span-pruned listing instead of a filter. */
+    * re-issued as a span-pruned listing instead of a filter — and
+    * whether its keys are distinct ([[KeySidecar.readFor]]). */
   private def existingKeysSideTagged(
-      d: WriteMode.Delta): (DataFrame, Boolean) =
+      d: WriteMode.Delta): (DataFrame, Boolean, Boolean) =
     keySidecar.readFor(d) match {
-      case Some(keys) => (keys, false)
-      case None => (SchemaTools.safeRead(spark, path), true)
+      case Some((keys, distinctKeys)) => (keys, false, distinctKeys)
+      case None => (SchemaTools.safeRead(spark, path), true, false)
     }
 
   private[lake] def keySidecar: KeySidecar = KeySidecar(spark, path)
@@ -202,13 +204,16 @@ final case class LakeWriter(
 
   /** The anti-diff itself, against an explicit existing-rows frame (path
     * datasets pass the parquet scan; bucketed tables pass the catalog
-    * table so the existing side keeps its bucket distribution). */
+    * table so the existing side keeps its bucket distribution). With
+    * `existingDistinct` (an exact-key sidecar) the key side skips its
+    * lake-wide distinct(): right-side duplicates never change an anti-join. */
   private def deltaDiffAgainst(
       df: DataFrame,
       d: WriteMode.Delta,
       existing0: DataFrame,
       allowBroadcast: Boolean = true,
-      windowSpanServe: Boolean = false
+      windowSpanServe: Boolean = false,
+      existingDistinct: Boolean = false
   ): DataFrame = {
     // Bucketed targets pass allowBroadcast = false: broadcasting the
     // existing side would discard its bucket distribution (and the
@@ -255,9 +260,10 @@ final case class LakeWriter(
           (x: DataFrame) =>
             d.subset.foldLeft(x)((acc, c) => acc.withColumn(s"__k_$c", col(c)))
       val keys = d.subset.map(c => s"__k_$c")
+      val keySide = keyed(existing).select(keys.map(col): _*)
       antiNullSafe(
         keyed(df),
-        maybeBroadcast(keyed(existing).select(keys.map(col): _*).distinct()),
+        maybeBroadcast(if (existingDistinct) keySide else keySide.distinct()),
         keys
       ).drop(keys: _*)
     } else {
@@ -310,7 +316,7 @@ final case class LakeWriter(
       // standing shingle index: the scorer never re-reads the corpus
       // text — together with `_keys` the WHOLE gate runs off sidecars
       case Some((shOld, rows)) =>
-        val (ek, fromPath) = existingKeysSideTagged(d.asDelta)
+        val (ek, fromPath, _) = existingKeysSideTagged(d.asDelta)
         val exact = deltaDiffAgainst(df, d.asDelta, ek,
           windowSpanServe = fromPath)
         val idc = "__dnd_id"
@@ -552,7 +558,7 @@ final case class LakeWriter(
     }
     shingleSidecar.readFor(d) match {
       case Some((shOld, rows)) =>
-        val (ek, fromPath) = existingKeysSideTagged(d.asDelta)
+        val (ek, fromPath, _) = existingKeysSideTagged(d.asDelta)
         val exact = deltaDiffAgainst(prepared, d.asDelta, ek,
           windowSpanServe = fromPath)
         val newKeyed = keyed(exact)
@@ -564,7 +570,7 @@ final case class LakeWriter(
           .select(col("id_new"), col("id_existing"), col("jaccard"))
       case None =>
         val existing = SchemaTools.safeRead(spark, path)
-        val (ek, fromPath) = existingKeysSideTagged(d.asDelta)
+        val (ek, fromPath, _) = existingKeysSideTagged(d.asDelta)
         val exact = deltaDiffAgainst(prepared, d.asDelta, ek,
           windowSpanServe = fromPath)
         var bounded = existing

@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
 import org.apache.spark.sql.functions.{array_join, col, count, filter, lit, split, sum}
 import org.apache.spark.sql.types._
 
@@ -196,61 +197,66 @@ object SchemaTools {
       cap: Int = 256): Option[StructType] = {
     if (files.isEmpty || files.size > cap) return None
     val conf = spark.sessionState.newHadoopConf()
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.max(1, math.min(16, files.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = files.map(f => Future(footerSchema(conf, f)))
-      val got = Await.result(Future.sequence(futs), Duration.Inf)
-      if (got.forall(_.isDefined) && got.flatten.distinct.size == 1)
-        got.head
-      else None
+    try onFooterPool(files)(footerSchema(conf, _)).distinct match {
+      case Seq(s @ Some(_)) => s
+      case _ => None
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** `f` over `xs` on a driver pool of at most 16 threads, in `xs`
+    * order, rethrowing the first failure — every footer sweep's bound. */
+  private[lake] def onFooterPool[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors
+      .newFixedThreadPool(math.max(1, math.min(16, xs.size)))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.traverse(xs)(x => Future(f(x))),
+      scala.concurrent.duration.Duration.Inf)
     finally pool.shutdown()
   }
 
   /** `spark.read` pre-loaded with the PROVEN-uniform footer schema of
-    * the given paths (files or directories — directories are listed
-    * driver-side, the same listing the scan itself performs), so the
-    * read plans with ZERO schema-inference jobs; plain `spark.read`
-    * when uniformity is unprovable ([[uniformFooterSchema]]). */
+    * the given paths (files, flat or hive-partitioned directories —
+    * listed driver-side, the same listing the scan itself performs), so
+    * the read plans with ZERO schema-inference jobs; plain `spark.read`
+    * when serving could differ from inference ([[servedFooterSchema]]). */
   def parquetReader(
       spark: SparkSession,
       paths: Seq[String]): org.apache.spark.sql.DataFrameReader =
-    flatUniformSchema(spark, paths)
+    servedFooterSchema(spark, paths)
       .fold(spark.read)(s => spark.read.schema(s))
 
-  /** The PROVEN-uniform footer schema of the given files/dirs, or None
-    * when serving it explicitly could differ from inference: a nested
-    * (possibly hive-partitioned) directory — whose scan appends
-    * path-valued columns no footer records — a non-Spark footer, or
-    * any schema disagreement. The [[parquetReader]]/pruned-scan
-    * backing check. */
-  def flatUniformSchema(
+  /** The PROVEN-uniform footer schema of the given files/dirs, when
+    * declaring it yields inference's own schema: flat directories, or
+    * hive layouts (every file under `name=value` dirs, one key sequence)
+    * — partition discovery still appends the path-valued columns after
+    * the declared ones, where inference puts them. None — any other
+    * subdirectory, mixed key sequences, a footer column named like a
+    * key (inference would place it differently), a non-Spark footer, or
+    * any disagreement — means "run the inference job". */
+  def servedFooterSchema(
       spark: SparkSession,
       paths: Seq[String]): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    var nested = false
-    val files = paths.flatMap { p =>
-      val listed = listDataFiles(spark, p)
-      if (!(listed.size == 1 && listed.head == p)) {
-        // p was a DIRECTORY: files under subdirectories mean Spark's
-        // partition discovery may append path-valued columns a footer
-        // schema lacks — serve the explicit schema only when every
-        // data file is a direct child
-        val hp = new Path(p)
-        val q = hp.getFileSystem(conf).makeQualified(hp).toString
-        if (listed.exists(f => {
-          val par = new Path(f).getParent
-          par == null || par.toString != q
-        })) nested = true
+    // each listed file's partition key names under its directory path:
+    // Nil for a direct child or a file path, None off the hive layout
+    val layout = paths.flatMap { p =>
+      val hp = new Path(p)
+      val q = hp.getFileSystem(conf).makeQualified(hp).toString + "/"
+      listDataFiles(spark, p).map { f =>
+        val par = new Path(f).getParent.toString + "/"
+        val dirs = par.stripPrefix(q).split('/').filter(_.nonEmpty).toSeq
+        f -> (if (f == p) Some(Nil)
+          else if (!par.startsWith(q) || dirs.exists(_.indexOf('=') < 1)) None
+          else Some(dirs.map(d => unescapePathName(d.take(d.indexOf('='))))))
       }
-      listed
-    }.filter(_.endsWith(".parquet"))
-    if (nested) None
-    else uniformFooterSchema(spark, files)
+    }
+    val files = layout.map(_._1).filter(_.endsWith(".parquet"))
+    layout.map(_._2).distinct match {
+      case Seq(Some(keys)) => uniformFooterSchema(spark, files).filterNot(
+        _.fieldNames.exists(n => keys.exists(_.equalsIgnoreCase(n))))
+      case _ => None
+    }
   }
 
   /** Per-file physical schemas via concurrent footer-only reads. The
@@ -266,17 +272,9 @@ object SchemaTools {
       spark: SparkSession,
       files: Seq[String]
   ): Seq[(String, StructType)] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val conf = spark.sessionState.newHadoopConf()
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.max(1, math.min(16, files.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = files.map(f => Future(f ->
-        footerSchema(conf, f).getOrElse(spark.read.parquet(f).schema)))
-      Await.result(Future.sequence(futs), Duration.Inf)
-    } finally pool.shutdown()
+    onFooterPool(files)(f =>
+      f -> footerSchema(conf, f).getOrElse(spark.read.parquet(f).schema))
   }
 
   /** Project `df` onto the unified schema: common columns cast to the
@@ -537,7 +535,8 @@ object SchemaTools {
   /** Read a dataset tolerating post-drift heterogeneity: datasets the
     * marker flags heterogeneous go through [[readUnified]] (conformed to
     * the marker schema so downstream key types are stable); everything
-    * else takes the plain multi-file scan. The safe default for every
+    * else takes the plain multi-file scan, its schema footer-served
+    * when provable ([[parquetReader]]). The safe default for every
     * internal full-dataset read on a Delta-family target — a plain
     * `spark.read.parquet` on mixed-schema files resolves against ONE
     * sampled footer and can miss columns or throw on widened types. */
@@ -545,7 +544,7 @@ object SchemaTools {
     readSchemaMarkerInfo(spark, path) match {
       case Some(info) if !info.homogeneous =>
         conformTo(readUnified(spark, path), info.schema)
-      case _ => spark.read.parquet(path)
+      case _ => parquetReader(spark, Seq(path)).parquet(path)
     }
 
   /** Physically rewrite schema-nonconforming parquet files to the unified

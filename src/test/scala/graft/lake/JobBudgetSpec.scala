@@ -1,11 +1,14 @@
 package graft.lake
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,16 +31,26 @@ class JobBudgetSpec extends AnyFunSuite {
 
   private val Tag = "graft.jobBudget"
 
-  /** The call sites of the jobs `f` starts. */
+  /** The call sites of the jobs `f` starts. Adaptive execution submits
+    * query stages from a pool thread whose stack names no source file
+    * of ours; such a job takes the call site of the action whose SQL
+    * execution it belongs to. */
   private def jobSites(f: => Any): Seq[String] = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
-    val sites = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val execSite = new ConcurrentHashMap[String, String]()
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execSite.put(s.executionId.toString, s.description)
+        case _ => ()
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(Tag) == tag))
-          sites.add(e.stageInfos.sortBy(-_.stageId).headOption
-            .map(_.name).getOrElse(""))
+          jobs.add(e.stageInfos.sortBy(-_.stageId).headOption
+            .map(_.name).getOrElse("") ->
+            e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
     }
     TestBus.drain(sc)
     sc.addSparkListener(listener)
@@ -47,7 +60,10 @@ class JobBudgetSpec extends AnyFunSuite {
       sc.setLocalProperty(Tag, null)
       sc.removeSparkListener(listener)
     }
-    sites.asScala.toSeq
+    jobs.asScala.toSeq.map { case (own, exec) =>
+      if (own.contains(".scala:") || exec == null) own
+      else Option(execSite.get(exec)).getOrElse(own)
+    }
   }
 
   private def sidecarJobs(sites: Seq[String]): Int =
@@ -106,6 +122,35 @@ class JobBudgetSpec extends AnyFunSuite {
     val reader = LakeReader(spark, dir).filter("id = 150")
     assert(sidecarJobs(jobSites(reader.load())) <= 1)
     assert(reader.load().inputFiles.length == 1)
+  }
+
+  test("LakeReader pipeline load on a hive-partitioned dataset plans " +
+      "with 0 jobs") {
+    val dir = TestSpark.tempDir("jbhive") + "/ds"
+    spark.range(400).select(col("id"), (col("id") % 7).as("v"),
+      (col("id") % 3).as("p")).write.partitionBy("p").parquet(dir)
+    val reader = LakeReader(spark, dir).filter("v > 2")
+      .distinctOn(Seq("v")).sort(Seq("v"))
+    assert(jobSites(reader.load()).isEmpty)
+    assert(reader.load().columns.toSeq == Seq("id", "v", "p"))
+    assert(reader.load().select("v").as[Long].collect().toSeq ==
+      Seq(3L, 4L, 5L, 6L))
+  }
+
+  test("a Delta write served by a trusted key sidecar: at most 2 jobs " +
+      "outside KeySidecar and 2 inside it") {
+    val dir = TestSpark.tempDir("jbdelta") + "/ds"
+    def batch(lo: Long) = spark.range(lo, lo + 200)
+      .select(col("id"), (col("id") % 4).as("p"), (col("id") * 3).as("x"))
+    val w = LakeWriter(spark, dir, WriteMode.Delta(subset = Seq("id")),
+      partitionBy = Seq("p"))
+    w.write(batch(0))
+    assert(w.keySidecar.trusted, "fixture: trusted key sidecar")
+    val sites = jobSites(w.write(batch(100)))
+    val inSidecar = sites.count(_.contains("KeySidecar.scala"))
+    assert(inSidecar <= 2, sites)
+    assert(sites.size - inSidecar <= 2, sites)
+    assert(spark.read.parquet(dir).count() == 300)
   }
 
   test("DynamicPruning.prunedFactScan: one sidecar job") {

@@ -493,6 +493,22 @@ class LakeWriterSpec extends AnyFunSuite {
     assert(docs.toSeq == Seq(1L, 4L)) // 3 is a near-dup of 1
   }
 
+  test("a key sidecar holding a duplicated key still yields exactly " +
+      "the new rows") {
+    val dir = TestSpark.tempDir("sidecar_dup")
+    val delta = WriteMode.Delta(subset = Seq("id"))
+    LakeWriter(spark, dir, delta).write(df3)
+    val w = LakeWriter(spark, dir, delta)
+    // a second copy of key 2 lands beside the sidecar's own part file;
+    // the trust marker stays, so the next diff serves the sidecar as is
+    Seq(2, 2).toDF("id").write.mode("append").parquet(s"$dir/_keys")
+    assert(w.keySidecar.trusted)
+    w.write(Seq((2, "x"), (4, "d"), (5, "e")).toDF("id", "v"))
+    val byId = spark.read.parquet(dir).as[(Int, String)].collect()
+    assert(byId.sorted.toSeq ==
+      Seq(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d", 5 -> "e"))
+  }
+
   test("sidecar compaction folds per-batch key files to a bounded count") {
     val dir = TestSpark.tempDir("sidecar_cp")
     val delta = WriteMode.Delta(subset = Seq("id"))

@@ -177,6 +177,54 @@ class SchemaToolsSpec extends AnyFunSuite {
     assert(schemas.head._2.fieldNames.sorted.toSeq == Seq("id", "v"))
   }
 
+  test("servedFooterSchema on hive layouts equals Spark's inferred " +
+      "schema, one key and two keys") {
+    val df = Seq((1L, "a", 10, "x"), (2L, "b", 20, "y"), (3L, "c", 10, "y"))
+      .toDF("id", "v", "p", "q")
+    Seq(Seq("p"), Seq("p", "q")).foreach { keys =>
+      val dir = TestSpark.tempDir("hiveserve") + "/ds"
+      df.write.partitionBy(keys: _*).parquet(dir)
+      assert(SchemaTools.servedFooterSchema(spark, Seq(dir)).isDefined, keys)
+      val served = SchemaTools.parquetReader(spark, Seq(dir)).parquet(dir)
+      val inferred = spark.read.parquet(dir)
+      assert(served.schema == inferred.schema, keys)
+      assert(served.collect().toSet == inferred.collect().toSet, keys)
+    }
+  }
+
+  test("servedFooterSchema refuses hive layouts inference could read " +
+      "differently") {
+    val rows = Seq((1L, 5), (2L, 6)).toDF("id", "p")
+    def refused(build: String => Unit): Unit = {
+      val dir = TestSpark.tempDir("hiverefuse") + "/ds"
+      build(dir)
+      assert(SchemaTools.servedFooterSchema(spark, Seq(dir)).isEmpty, dir)
+    }
+    // a footer column named like the partition key
+    refused(d => rows.write.parquet(s"$d/p=1"))
+    // mixed key sequences
+    refused { d =>
+      rows.select("id").write.parquet(s"$d/a=1")
+      rows.select("id").write.parquet(s"$d/a=2/b=3")
+    }
+    // a subdirectory that is not name=value
+    refused(d => rows.select("id").write.parquet(s"$d/sub"))
+    // a non-Spark footer (no recorded Spark schema)
+    refused { d =>
+      import org.apache.parquet.example.data.simple.SimpleGroupFactory
+      import org.apache.parquet.hadoop.example.ExampleParquetWriter
+      import org.apache.parquet.hadoop.util.HadoopOutputFile
+      val conf = spark.sparkContext.hadoopConfiguration
+      val schema = org.apache.parquet.schema.MessageTypeParser
+        .parseMessageType("message m { required int64 id; }")
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$d/a=1/part-0.parquet"), conf))
+        .withType(schema).withConf(conf).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup().append("id", 1L))
+      finally w.close()
+    }
+  }
+
   test("schema map codec round-trips") {
     val st = StructType(Seq(
       StructField("a", LongType), StructField("b", StringType),
