@@ -7260,10 +7260,9 @@ object SparkEntry {
       val r0 = log.resolve(None)
       assert(r0.tombstones.nonEmpty,
         "positional delete must leave standing dv marks")
-      val markedBefore = s.read
-        .parquet(r0.tombstones.map(n => s"$root/t174/data/$n"): _*)
-        .select("__dv_file").distinct()
-        .collect().map(_.getString(0)).toSet
+      val markedBefore = SchemaTools.distinctStrings(s.read
+        .parquet(r0.tombstones.map(n => s"$root/t174/data/$n"): _*),
+        "__dv_file").toSet
       val preRows = s.sql(
         "SELECT o_orderkey, o_custkey, o_totalprice FROM t174")
         .localCheckpoint(true)

@@ -1222,8 +1222,7 @@ final class CommitLog(spark: SparkSession, root: String) {
           // guarded-broadcast semi-join per dv commit, O(marks).
           val dvPaths = c.files.map(dataPath)
           val dvf = readerFor(dvPaths).parquet(dvPaths: _*)
-          val markedFiles = dvf.select("__dv_file").distinct()
-            .collect().map(_.getString(0)).toSeq
+          val markedFiles = SchemaTools.distinctStrings(dvf, "__dv_file")
           val r = resolve(Some(c.version))
           val pre = readConformed(markedFiles, r.schemaOf,
             withPos = true)
@@ -2337,10 +2336,9 @@ final class CommitLog(spark: SparkSession, root: String) {
     val dv = r.tombstones.filter(isDvName)
     if (dv.isEmpty) return None
     val liveSet = r.data.toSet
-    val marked = readerFor(dv.map(dataPath))
-      .parquet(dv.map(dataPath): _*)
-      .select("__dv_file").distinct()
-      .collect().map(_.getString(0)).filter(liveSet).toSeq
+    val marked = SchemaTools.distinctStrings(
+      readerFor(dv.map(dataPath)).parquet(dv.map(dataPath): _*),
+      "__dv_file").filter(liveSet)
     if (marked.isEmpty) {
       // every mark targets a dead file — nothing to rewrite, but the
       // dv files still join into every read: retire them outright
@@ -2531,9 +2529,9 @@ final class CommitLog(spark: SparkSession, root: String) {
           .select(physKeys.map(col) :+ col("__file"): _*)
         val cond =
           physKeys.map(k => scan(k) <=> batchKeys(k)).reduce(_ && _)
-        scan.join(bcast(batchKeys), cond, "left_semi")
-          .select("__file").distinct()
-          .collect().map(x => relFileOf(standingDv)(x.getString(0))).toSeq
+        SchemaTools.distinctStrings(
+          scan.join(bcast(batchKeys), cond, "left_semi"), "__file")
+          .map(relFileOf(standingDv))
       }
     // CHANGE DATA FEED (opt-in, [[CommitLog.CdfEnabledKey]]): a
     // mutating upsert persists its exact change rows in the same
@@ -2985,11 +2983,9 @@ final class CommitLog(spark: SparkSession, root: String) {
         // only LIVE rows count as hits: a file whose only key matches
         // are dv-deleted rows must not rewrite
         val scan = evolvedScanWithFile(keyCandidates)
-        scan.join(bcast(src),
+        SchemaTools.distinctStrings(scan.join(bcast(src),
             keys.map(k => scan(k) <=> src(s"__s_$k")).reduce(_ && _))
-          .filter(coalesce(matchedOr, lit(false)))
-          .select("__file").distinct()
-          .collect().map(x => toRel(x.getString(0))).toSeq
+          .filter(coalesce(matchedOr, lit(false))), "__file").map(toRel)
       }
     // NOT MATCHED BY SOURCE: every live row must prove a source match
     // or face the clauses — scan all live files (condition spans
@@ -3011,12 +3007,10 @@ final class CommitLog(spark: SparkSession, root: String) {
           // dv-applied for the same reason as filesWithHits: a
           // deleted row is not a live row facing the NMBS clauses
           val scan = evolvedScanWithFile(cands)
-          scan.join(bcast(batchKeys),
+          SchemaTools.distinctStrings(scan.join(bcast(batchKeys),
               keys.map(k => scan(k) <=> batchKeys(k)).reduce(_ && _),
               "left_anti")
-            .filter(coalesce(nmbsOr, lit(false)))
-            .select("__file").distinct()
-            .collect().map(x => toRel(x.getString(0))).toSeq
+            .filter(coalesce(nmbsOr, lit(false))), "__file").map(toRel)
         }
       }
     val touched = (filesWithHits ++ nmbsTouched).distinct
@@ -3344,10 +3338,9 @@ final class CommitLog(spark: SparkSession, root: String) {
     // positionally-deleted rows must not rewrite
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
-      else appliedWithFile(candidates, r.schemaOf, standingDv)
-        .filter(hit)
-        .select("__file").distinct()
-        .collect().map(x => relFileOf(standingDv)(x.getString(0))).toSeq
+      else SchemaTools.distinctStrings(
+        appliedWithFile(candidates, r.schemaOf, standingDv).filter(hit),
+        "__file").map(relFileOf(standingDv))
     if (touched.isEmpty) return (plannedV, 0)
     // standing positional marks apply to the rewritten survivors
     val out = readApplied(touched, r.schemaOf, standingDv)
@@ -3456,10 +3449,9 @@ final class CommitLog(spark: SparkSession, root: String) {
       else prunedLive(predicate, r.data, r.spanOf).getOrElse(r.data)
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
-      else appliedWithFile(candidates, r.schemaOf, standingDv)
-        .filter(hit)
-        .select("__file").distinct()
-        .collect().map(x => relFileOf(standingDv)(x.getString(0))).toSeq
+      else SchemaTools.distinctStrings(
+        appliedWithFile(candidates, r.schemaOf, standingDv).filter(hit),
+        "__file").map(relFileOf(standingDv))
     val out = touched match {
       case Nil => b
       case t => readApplied(t, r.schemaOf, standingDv)
@@ -3592,10 +3584,9 @@ final class CommitLog(spark: SparkSession, root: String) {
     val spans = spansOf(names)
     val nMarked = spans.values.map(_.nRows).sum
     if (nMarked == 0L) return (plannedV, 0L)
-    val markedFiles = readerFor(names.map(dataPath))
-      .parquet(names.map(dataPath): _*)
-      .select("__dv_file").distinct()
-      .collect().map(_.getString(0)).toSet
+    val markedFiles = SchemaTools.distinctStrings(
+      readerFor(names.map(dataPath)).parquet(names.map(dataPath): _*),
+      "__dv_file").toSet
     var v = latestVersion() + 1
     var done = false
     while (!done) {
@@ -3691,10 +3682,9 @@ final class CommitLog(spark: SparkSession, root: String) {
     // positionally-deleted rows must not rewrite
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
-      else appliedWithFile(candidates, r.schemaOf, standingDv)
-        .filter(hit)
-        .select("__file").distinct()
-        .collect().map(x => relFileOf(standingDv)(x.getString(0))).toSeq
+      else SchemaTools.distinctStrings(
+        appliedWithFile(candidates, r.schemaOf, standingDv).filter(hit),
+        "__file").map(relFileOf(standingDv))
     if (touched.isEmpty) return (plannedV, 0)
     // standing positional marks apply to the rewritten rows
     val base = readApplied(touched, r.schemaOf, standingDv)

@@ -745,25 +745,9 @@ object FileStats {
     val fs = fsOf(spark, d)
     val tmp = new Path(path, "_stats_tmp")
     val stats = collectFrom(spark, df, path, bloomCols, bloomBits)
-    // span rows are tiny — one part file reads fastest. Bloom columns
-    // change the math: every row carries bloomCols × (1 + bits/8)
-    // blob bytes, so at the 1M-file design point a single-task write
-    // funnels gigabytes through one executor. Shard by file-name hash
-    // (repartition = each task writes its own shard, no driver
-    // funnel); probe reads parallelize across shards and readers just
-    // scan the directory either way.
-    val out =
-      if (bloomCols.isEmpty) stats.coalesce(1)
-      else {
-        val blobBytes = bloomCols.size.toLong * (1L + bloomBits / 8)
-        val nFiles =
-          math.max(1, scala.util.Try(df.inputFiles.length)
-            .getOrElse(0)).toLong
-        val shards = math.max(1L, math.min(1024L,
-          nFiles * blobBytes / TargetShardBytes + 1L)).toInt
-        stats.repartition(shards, col("file"))
-      }
-    out.write.mode("overwrite").parquet(tmp.toString)
+    sharded(stats, bloomCols.size.toLong * (1L + bloomBits / 8),
+        math.max(1, scala.util.Try(df.inputFiles.length).getOrElse(0)))
+      .write.mode("overwrite").parquet(tmp.toString)
     if (fs.exists(d)) fs.delete(d, true)
     fs.rename(tmp, d)
     seal(spark, path)
@@ -773,6 +757,23 @@ object FileStats {
     * amortize footers, small enough that no single task carries an
     * unbounded blob payload. */
   private val TargetShardBytes: Long = 64L << 20
+
+  /** Sidecar rows laid out for the write, by [[buildFrom]] and
+    * [[appendFiles]] alike: `nFiles` rows (evaluated only when blooms
+    * exist) of `blobBytes` bloom blobs each. Span-only rows are tiny and
+    * one part file reads fastest, but bloom blobs add up: at the
+    * 1M-file design point a single-task write would push gigabytes
+    * through one executor, so past [[TargetShardBytes]] the rows shard
+    * by file-name hash (each task writes its own shard; readers scan
+    * the directory either way). One shard is a `coalesce`, never a
+    * second exchange after the per-file aggregate. */
+  private def sharded(rows: DataFrame, blobBytes: Long, nFiles: => Int)
+      : DataFrame = {
+    val shards = if (blobBytes == 0L) 1 else math.max(1L, math.min(1024L,
+      nFiles.toLong * blobBytes / TargetShardBytes + 1L)).toInt
+    if (shards == 1) rows.coalesce(1)
+    else rows.repartition(shards, col("file"))
+  }
 
   /** Every file the sidecar has a row for (by full path as recorded at
     * build time) — None without a trusted manifest. Data files are
@@ -903,20 +904,9 @@ object FileStats {
       .agg(aggs.head, aggs.tail: _*)
       .select(statsSchema.fields.map(f =>
         col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-    // same sharding math as [[buildFrom]]: span-only rows are tiny
-    // (one part file reads fastest), but bloom-carrying rows funnel
-    // blobs — a large bloom-carrying backfill append must not push
-    // gigabytes through one task
-    val out =
-      if (bloomed.isEmpty) delta.coalesce(1)
-      else {
-        val blobBytes = bloomParams.getOrElse(Nil)
-          .map { case (_, bits, _) => 1L + bits / 8 }.sum
-        val shards = math.max(1L, math.min(1024L,
-          files.length.toLong * blobBytes / TargetShardBytes + 1L)).toInt
-        delta.repartition(shards, col("file"))
-      }
-    out.write.mode("append").parquet(d.toString)
+    sharded(delta, bloomParams.getOrElse(Nil)
+        .map { case (_, bits, _) => 1L + bits / 8 }.sum, files.length)
+      .write.mode("append").parquet(d.toString)
     seal(spark, path)
   }
 

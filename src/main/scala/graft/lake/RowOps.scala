@@ -225,9 +225,8 @@ object RowOps {
         val scan = rd.parquet(candidates: _*)
           .select(keys.map(col) :+ input_file_name().as("__file"): _*)
         val cond = keys.map(k => scan(k) <=> batchKeys(k)).reduce(_ && _)
-        scan.join(broadcast(batchKeys), cond, "left_semi")
-          .select("__file").distinct()
-          .collect().map(_.getString(0)).toSeq
+        SchemaTools.distinctStrings(
+          scan.join(broadcast(batchKeys), cond, "left_semi"), "__file")
       }
 
     cdfVersion.foreach { v =>
@@ -357,10 +356,8 @@ object RowOps {
       .getOrElse(all)
     val touched: Seq[String] =
       if (candidates.isEmpty) Nil
-      else rd.parquet(candidates: _*)
-        .filter(hit)
-        .select(input_file_name().as("__file")).distinct()
-        .collect().map(_.getString(0)).toSeq
+      else SchemaTools.distinctStrings(rd.parquet(candidates: _*)
+        .filter(hit).select(input_file_name().as("__file")), "__file")
     cdfVersion.foreach { v =>
       val deleted =
         if (touched.isEmpty)
@@ -402,10 +399,9 @@ object RowOps {
       else {
         val scan = rd.parquet(candidates: _*)
           .select(keys.map(col) :+ input_file_name().as("__file"): _*)
-        scan.join(broadcast(ks),
-            keys.map(k => scan(k) <=> ks(k)).reduce(_ && _), "left_semi")
-          .select("__file").distinct()
-          .collect().map(_.getString(0)).toSeq
+        SchemaTools.distinctStrings(scan.join(broadcast(ks),
+            keys.map(k => scan(k) <=> ks(k)).reduce(_ && _), "left_semi"),
+          "__file")
       }
     cdfVersion.foreach { v =>
       val doomed =
@@ -636,10 +632,8 @@ object RowOps {
         val scan = rd.parquet(candidates: _*)
           .filter(col("is_current"))
           .select(keys.map(col) :+ input_file_name().as("__file"): _*)
-        scan.join(broadcast(changedKeys), kCond(scan, changedKeys),
-            "left_semi")
-          .select("__file").distinct()
-          .collect().map(_.getString(0)).toSeq
+        SchemaTools.distinctStrings(scan.join(broadcast(changedKeys),
+          kCond(scan, changedKeys), "left_semi"), "__file")
       }
 
     def versioned(rows: DataFrame): DataFrame = rows

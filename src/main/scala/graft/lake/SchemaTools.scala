@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
 import org.apache.spark.sql.functions.{array_join, col, count, filter, lit, split, sum}
 import org.apache.spark.sql.types._
@@ -136,6 +136,16 @@ object SchemaTools {
       org.apache.spark.sql.functions.broadcast(df)
     else df
   }
+
+  /** The distinct values of string column `c` (a file-name column,
+    * never null), sorted. Each task dedupes its own rows and the driver
+    * merges the sets: one job and no exchange, where `distinct()` plans
+    * a partial aggregate, an exchange and a final aggregate. Every
+    * "which files hold matching rows" probe goes through here. */
+  def distinctStrings(df: DataFrame, c: String): Seq[String] =
+    df.select(col(c)).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().distinct.sorted.toSeq
 
   /** Recursively list data files under a path (parquet/csv/...). */
   def listDataFiles(spark: SparkSession, path: String): Seq[String] = {

@@ -2140,6 +2140,44 @@ class CommitLogSpec extends AnyFunSuite {
         s"readFiltered must equal read().filter for `$p`")
     }
   }
+
+  test("the touched-file probe finds the files select.distinct finds: " +
+      "hits split across tasks of one file, and positional dv marks") {
+    val root = TestSpark.tempDir("clogprobe")
+    val log = CommitLog(spark, root).init()
+    def distinctCollect(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(c).distinct().collect().map(_.getString(0)).sorted.toSeq
+    // one file of many small row groups, then a second small file
+    SchemaTools.withSessionConf(spark, "parquet.block.size", "4096") {
+      log.append(spark.range(0, 4000, 1, 1)
+        .select(col("id"), (col("id") * 2).as("v")))
+    }
+    val big = log.liveFiles().head
+    log.append(spark.range(4000, 4100, 1, 1)
+      .select(col("id"), (col("id") * 2).as("v")))
+    val small = log.liveFiles().filterNot(_ == big).head
+    SchemaTools.withSessionConf(spark,
+        "spark.sql.files.maxPartitionBytes", "4096") {
+      val hits = spark.read.parquet(s"$root/data/$big", s"$root/data/$small")
+        .withColumn("__file", input_file_name()).filter("id % 7 = 3")
+      assert(hits.filter(col("id") < 4000).select(spark_partition_id())
+        .distinct().count() > 1,
+        "fixture: the big file's hits must span several tasks")
+      val got = SchemaTools.distinctStrings(hits, "__file")
+      assert(got == distinctCollect(hits, "__file") && got.size == 2)
+    }
+    // the verb's probe: a hit-free file is not rewritten
+    val (v, _) = log.deleteWhere("id % 7 = 3 AND id < 4000")
+    assert(log.commit(v).removed == Seq(big))
+    // positional marks in both live files
+    val (_, marked) = log.deleteWhereMor("id % 5 = 1")
+    assert(marked == 706L)
+    val dv = log.resolve(None).tombstones
+    val marks = spark.read.parquet(dv.map(n => s"$root/data/$n"): _*)
+    val markedFiles = SchemaTools.distinctStrings(marks, "__dv_file")
+    assert(markedFiles == distinctCollect(marks, "__dv_file") &&
+      markedFiles == log.liveFiles().sorted && markedFiles.size == 2)
+  }
 }
 
 object CommitLogSpec {

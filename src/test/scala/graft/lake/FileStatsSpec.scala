@@ -13,8 +13,7 @@ class FileStatsSpec extends AnyFunSuite {
       "layout; out-of-span ranges read zero files but keep the schema") {
     val dir = TestSpark.tempDir("fstats") + "/ds"
     // 10 files, each a contiguous id band of 100
-    spark.range(1000).select(col("id"), (col("id") * 2).as("v"))
-      .orderBy("id").repartitionByRange(10, col("id"))
+    spark.range(0, 1000, 1, 10).select(col("id"), (col("id") * 2).as("v"))
       .write.mode("overwrite").parquet(dir)
     FileStats.build(spark, dir)
     assert(FileStats.trusted(spark, dir))
@@ -74,9 +73,8 @@ class FileStatsSpec extends AnyFunSuite {
       "columns from the pruned file list (basePath), identical to the " +
       "full-scan filter") {
     val dir = TestSpark.tempDir("fstats_hive") + "/ds"
-    spark.range(400)
+    spark.range(0, 400, 1, 8)
       .select(col("id"), (col("id") % 4).as("p"), (col("id") * 3).as("v"))
-      .repartitionByRange(8, col("id"))
       .write.mode("overwrite").partitionBy("p").parquet(dir)
     FileStats.build(spark, dir)
     assert(FileStats.trusted(spark, dir))
@@ -126,11 +124,10 @@ class FileStatsSpec extends AnyFunSuite {
       "literals, and readBand with java.sql.Timestamp endpoints") {
     val dir = TestSpark.tempDir("fstats_ts") + "/ds"
     // 10 files, each a contiguous one-day band
-    spark.range(1000)
+    spark.range(0, 1000, 1, 10)
       .select(col("id"),
         (lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00"))
           + expr("make_interval(0,0,0,0,0,0, id * 864)")).as("ts"))
-      .orderBy("id").repartitionByRange(10, col("id"))
       .write.mode("overwrite").parquet(dir)
     FileStats.build(spark, dir)
     val all = SchemaTools.listDataFiles(spark, dir).size
@@ -169,10 +166,9 @@ class FileStatsSpec extends AnyFunSuite {
       "string literals prune conservatively and identically to the " +
       "residual filter") {
     val dir = TestSpark.tempDir("fstats_dt") + "/ds"
-    spark.range(300)
+    spark.range(0, 300, 1, 6)
       .select(col("id"),
         expr("date_add(date'2024-01-01', cast(id / 10 as int))").as("d"))
-      .orderBy("id").repartitionByRange(6, col("id"))
       .write.mode("overwrite").parquet(dir)
     FileStats.build(spark, dir)
     val all = SchemaTools.listDataFiles(spark, dir).size
@@ -202,8 +198,8 @@ class FileStatsSpec extends AnyFunSuite {
       val band = ('a' + i / 100).toChar
       (i.toLong, band.toString * 80 + f"$i%03d")
     }
-    rows.toDF("id", "s").orderBy("s").repartitionByRange(4, col("s"))
-      .write.mode("overwrite").parquet(dir)
+    rows.grouped(100).foreach(band => band.toDF("id", "s").coalesce(1)
+      .write.mode("append").parquet(dir))
     FileStats.build(spark, dir)
     val all = SchemaTools.listDataFiles(spark, dir).size
     // a band entirely inside one prefix family
@@ -234,12 +230,11 @@ class FileStatsSpec extends AnyFunSuite {
   test("mixed-domain conjunction prunes on every covered axis at once " +
       "(numeric + timestamp + string in one predicate)") {
     val dir = TestSpark.tempDir("fstats_mix") + "/ds"
-    spark.range(1000)
+    spark.range(0, 1000, 1, 10)
       .select(col("id"),
         (lit(java.sql.Timestamp.valueOf("2024-03-01 00:00:00"))
           + expr("make_interval(0,0,0,0,0,0, id * 864)")).as("ts"),
         concat(lit("user_"), format_string("%04d", col("id"))).as("u"))
-      .orderBy("id").repartitionByRange(10, col("id"))
       .write.mode("overwrite").parquet(dir)
     FileStats.build(spark, dir)
     val all = SchemaTools.listDataFiles(spark, dir).size

@@ -20,7 +20,9 @@ import graft.TestSpark
   * which SQL executions carry to their pool threads, so other threads'
   * jobs never count) under the call site Spark names it by. A "sidecar
   * job" is a `collect` issued from FileStats.scala: one read of the
-  * `_stats` sidecar by a prune.
+  * `_stats` sidecar by a prune. Bracketed counts are the ones measured
+  * before the touched-file probe and the single-shard sidecar write
+  * lost their extra shuffle.
   *
   * Ceilings may only be tightened. Raising one needs its cause written
   * in CHANGES.md.
@@ -69,6 +71,11 @@ class JobBudgetSpec extends AnyFunSuite {
   private def sidecarJobs(sites: Seq[String]): Int =
     sites.count(_.startsWith("collect at FileStats.scala"))
 
+  /** Jobs of a touched-file probe (`SchemaTools.distinctStrings`),
+    * the shuffles that adaptive execution runs for its inputs included. */
+  private def probeJobs(sites: Seq[String]): Int =
+    sites.count(_.startsWith("collect at SchemaTools.scala"))
+
   /** Three single-file appends of contiguous id bands, every file
     * log-spanned, under a trusted sidecar with a bloom on `id`. */
   private def spannedLog(prefix: String): CommitLog = {
@@ -113,11 +120,53 @@ class JobBudgetSpec extends AnyFunSuite {
       .collect().toSeq == Seq(775L))
   }
 
+  test("CommitLog deleteWhere, upsert and merge: one touched-file " +
+      "probe job, plus the key side's own shuffle") {
+    import CommitLog.{MergeClause, MergeInsert, MergeUpdate}
+    val log = spannedLog("jbrow")
+    def batch(lo: Long) = spark.range(lo, lo + 10)
+      .select(col("id"), (col("id") * 5).as("x"))
+    val del = jobSites(log.deleteWhere("id BETWEEN 150 AND 159"))
+    assert(probeJobs(del) == 1 && del.size <= 2, del) // [2, 3]
+    // keys 95..104 straddle two files
+    val ups = jobSites(log.upsert(batch(95), Seq("id")))
+    assert(probeJobs(ups) == 2 && ups.size <= 6, ups) // [3, 7]
+    val mrg = jobSites(log.merge(batch(250), Seq("id"),
+      matched = Seq(MergeClause(None, MergeUpdate(Seq("x" -> "__s_x")))),
+      notMatched = Seq(MergeClause(None,
+        MergeInsert(Seq("id" -> "__s_id", "x" -> "__s_x")))),
+      notMatchedBySource = Nil))
+    assert(probeJobs(mrg) == 2 && mrg.size <= 8, mrg) // [3, 9]
+    assert(log.read().filter($"id".isin(95, 104, 155, 255)).select("x")
+      .as[Long].collect().sorted.toSeq == Seq(475L, 520L, 1275L))
+  }
+
+  test("buildStats with a bloom column: at most 2 write jobs") {
+    val log = spannedLog("jbbuild")
+    val sites = jobSites(log.buildStats(bloomCols = Seq("id"),
+      bloomBits = 1 << 13))
+    // [3]: a single-shard sidecar no longer repartitions by file
+    assert(sites.count(_.startsWith("parquet at FileStats.scala")) <= 2,
+      sites)
+    assert(log.candidateDataFiles("id = 150").map(_.size).contains(1))
+  }
+
+  test("RowOps.deleteWhere on a flat dataset: one touched-file probe " +
+      "job") {
+    val dir = TestSpark.tempDir("jbrowops") + "/ds"
+    spark.range(0, 400, 1, 4).select(col("id"), (col("id") % 7).as("v"))
+      .write.parquet(dir)
+    val sites = jobSites(RowOps.deleteWhere(spark, dir,
+      "id BETWEEN 150 AND 159"))
+    assert(probeJobs(sites) == 1, sites) // [2]
+    assert(spark.read.parquet(dir).count() == 390)
+  }
+
   test("LakeReader.filter(...).load() over a trusted sidecar: one " +
       "sidecar job") {
     val dir = TestSpark.tempDir("jblr") + "/ds"
-    spark.range(400).select(col("id"), (col("id") % 7).as("v"))
-      .repartitionByRange(4, col("id")).write.parquet(dir)
+    spark.range(0, 400, 1, 4).select(col("id"), (col("id") % 7).as("v"))
+      .write.parquet(dir)
     FileStats.build(spark, dir, bloomCols = Seq("id"))
     val reader = LakeReader(spark, dir).filter("id = 150")
     assert(sidecarJobs(jobSites(reader.load())) <= 1)
@@ -155,8 +204,9 @@ class JobBudgetSpec extends AnyFunSuite {
 
   test("DynamicPruning.prunedFactScan: one sidecar job") {
     val dir = TestSpark.tempDir("jbdfp") + "/fact"
-    spark.range(2000).select(col("id").as("k"), (col("id") % 97).as("v"))
-      .repartitionByRange(8, col("k")).write.parquet(dir)
+    spark.range(0, 2000, 1, 8)
+      .select(col("id").as("k"), (col("id") % 97).as("v"))
+      .write.parquet(dir)
     FileStats.build(spark, dir, bloomCols = Seq("k"))
     val dim = Seq(120L, 130L, 1800L).toDF("dk")
     assert(sidecarJobs(jobSites(DynamicPruning.prunedFactScan(

@@ -31,10 +31,8 @@ class RowOpsSpec extends AnyFunSuite {
 
   /** 4 files, contiguous 25-key bands: [0,25) [25,50) [50,75) [75,100) */
   private def seed(dir: String): Unit =
-    spark.range(100)
+    spark.range(0, 100, 1, 4)
       .select(col("id"), (col("id") * 10).as("v"))
-      .repartitionByRange(4, col("id"))
-      .sortWithinPartitions("id")
       .write.mode("overwrite").parquet(dir)
 
   test("upsert rewrites only files holding matched keys; untouched " +
@@ -199,12 +197,10 @@ class RowOpsSpec extends AnyFunSuite {
 
   /** SCD2 seed: keys 0..99 in 4 key-banded files, one open v0 each. */
   private def seedScd(dir: String): Unit =
-    spark.range(100)
+    spark.range(0, 100, 1, 4)
       .select(col("id"), (col("id") * 10).as("v"),
         lit(0L).as("valid_from"), lit(null).cast("long").as("valid_to"),
         lit(true).as("is_current"))
-      .repartitionByRange(4, col("id"))
-      .sortWithinPartitions("id")
       .write.mode("overwrite").parquet(dir)
 
   test("scd2Merge: changed keys close v0 and open v1, no-op " +
