@@ -20,34 +20,39 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * <root>/_commits/v%020d.json       // the log: one file per version
   * }}}
   *
-  *  - A write stages its files under `_staged/<uuid>/`, moves them into
-  *    `data/` (names are UUID-unique — no collision, still invisible),
-  *    and then attempts the commit: the FULL manifest payload is
-  *    written to a temp file first and made visible under the version
-  *    slot in one atomic step (hard-link on `file://`, no-overwrite
-  *    rename on HDFS, conditional PUT with the full body on S3) — the
-  *    Delta/Iceberg visibility contract: a version either does not
-  *    exist or carries its complete manifest; no reader can observe a
-  *    claimed-but-empty or partially-written commit. Success means
-  *    this writer owns version N; failure means another writer took N,
-  *    so re-read the log and try N+1.
-  *  - APPEND commits commute: the retry loop always succeeds, no
-  *    validation needed (Iceberg's fast-append).
-  *  - REPLACE commits (overwrite, compaction) carry the base version
-  *    the writer planned against. At commit time the winner-check is
-  *    the CAS itself; if versions advanced past the base, the replace
-  *    CONFLICTS (someone appended what this rewrite never saw) and the
-  *    writer must re-plan on fresh state — a
-  *    ConcurrentModificationException, Iceberg's validation failure.
-  *  - A read resolves the log, not the directory: the newest REPLACE
-  *    resets the live set, later APPENDs add to it. Uncommitted moves
-  *    and crashed stagings are invisible by construction (debris for a
-  *    vacuum sweep, never data).
+  * A write stages its files under `_staged/<uuid>/` and moves them into
+  * `data/` (UUID-unique names: no collision, still invisible). Every
+  * verb then commits through ONE optimistic transaction, [[Txn]] (Delta's
+  * OptimisticTransaction + ConflictChecker), and states only what it
+  * planned on, what conflicts with it, and what it writes. Each attempt:
+  *  1. reads the tip once. The window is the commits in
+  *     `(planned, tip]`, read only if a rule looks at them;
+  *  2. conflicts (ConcurrentModificationException: re-plan on fresh
+  *     state) when a file the verb rewrites is no longer live, or a
+  *     positional delete in the window marks one;
+  *  3. runs the verb's own rule, which returns the commit's payload
+  *     ([[CommitLog.Action]]), abandons, or conflicts;
+  *  4. enforces the CHECK / NOT NULL constraints on the staged files,
+  *     for the verbs that add rows;
+  *  5. CASes the payload at tip + 1. The full manifest lands in a temp
+  *     file and is linked into the version slot in one atomic step
+  *     (hard link on `file://`, no-overwrite rename on HDFS, conditional
+  *     PUT on S3), so a version either does not exist or carries its
+  *     complete manifest. A lost slot means another writer took it: the
+  *     attempt repeats on the new tip (appends commute, Iceberg's
+  *     fast-append). Replace, restore, adopt and clone CAS only at their
+  *     base version + 1, and conflict instead of retrying.
+  * After a won CAS, in this order: the auto-checkpoint; the `_stats`
+  * sidecar upkeep (an append extends it; a replace, a restore, or a
+  * commit that removes a live data file drops it; any other commit
+  * leaves it); the [[onCommit]] hooks.
   *
-  * Read cost is O(commits) metadata + the manifest's files — no
-  * recursive listing; compaction collapses the file count and the
-  * checkpoint trick (fold old commits into one) bounds log length when
-  * needed.
+  * A read resolves the log, not the directory: the newest REPLACE
+  * resets the live set and later commits fold into it. Uncommitted
+  * moves and crashed stagings are invisible by construction (debris for
+  * a vacuum sweep, never data). Read cost is O(commits) metadata + the
+  * manifest's files — no recursive listing; checkpoints bound the
+  * replay.
   */
 final class CommitLog(spark: SparkSession, root: String) {
 
@@ -217,7 +222,7 @@ final class CommitLog(spark: SparkSession, root: String) {
   def earliestVersion(): Long =
     existingVersions().headOption.getOrElse(0L)
 
-  import CommitLog.{Commit, FileSpans, Resolved}
+  import CommitLog.{Action, Commit, FileSpans, Resolved}
 
   private def baseMarker = new Path(root, "_base.json")
 
@@ -1094,11 +1099,8 @@ final class CommitLog(spark: SparkSession, root: String) {
       .select(keys.map(org.apache.spark.sql.functions.col): _*)
       .distinct(), flat = true)
     val spans = spansOf(names)
-    var v = latestVersion() + 1
-    while (!tryCas(v, "delete", names, stats = spans))
-      v = latestVersion() + 1
-    notifyCommit()
-    v
+    new Txn("deleteKeysMor")
+      .run(_ => Some(Action("delete", names, stats = spans))).get
   }
 
   /** Incremental consumption between versions — the commit log's CDC
@@ -1332,12 +1334,8 @@ final class CommitLog(spark: SparkSession, root: String) {
     val adoptedStats =
       if (adoptedSchema.isDefined) spansOf(names, adoptedSchema)
       else Map.empty[String, FileSpans]
-    if (!tryCas(1L, "append", names, schema = adoptedSchema,
-        stats = adoptedStats))
-      throw new java.util.ConcurrentModificationException(
-        "another writer claimed v1 during adoption")
-    notifyCommit()
-    1L
+    new Txn("adopt", base = Some(0L)).run(_ => Some(Action("append",
+      names, schema = adoptedSchema, stats = adoptedStats))).get
   }
 
   /** Stage `df`'s files into `data/` (invisible until committed) and
@@ -1484,31 +1482,104 @@ final class CommitLog(spark: SparkSession, root: String) {
       .map(_ -> FileSpans(0L, Map.empty)).toMap
   }
 
-  private def tryCas(v: Long, kind: String, names: Seq[String],
-      removed: Seq[String] = Nil,
-      txn: Option[(String, Long)] = None,
-      schema: Option[StructType] = None,
-      stats: Map[String, FileSpans] = Map.empty,
-      schemaGroups: Map[String, StructType] = Map.empty,
-      constraints: Option[Map[String, String]] = None,
-      props: Option[Map[String, String]] = None,
-      changeFiles: Seq[String] = Nil,
-      clusteredKeys: Option[String] = None): Boolean = {
-    val node = mapper.createObjectNode()
-    node.put("kind", kind)
-    if (changeFiles.nonEmpty) {
-      val cfArr = node.putArray("changeFiles")
-      changeFiles.foreach(cfArr.add)
+  /** The commits that landed after a verb planned, `(plannedV, tip]`
+    * (none when it planned on no version, `plannedV < 0`), read on first
+    * use: an attempt whose rule never looks at them reads no manifest. */
+  private final class Window(plannedV: Long, val tip: Long) {
+    lazy val commits: Seq[Commit] =
+      if (plannedV < 0) Nil else (plannedV + 1 to tip).map(commit)
+  }
+
+  private def conflict(why: String) =
+    new java.util.ConcurrentModificationException(
+      s"$why — re-plan on fresh state")
+
+  /** The optimistic transaction every verb commits through; the class
+    * doc states its protocol. `verb` names the verb in conflict
+    * messages; `plannedV` is the version the verb planned on (the
+    * window's lower bound); `rewrites` are the live files the commit
+    * removes; `base` makes it exclusive (CAS only while the tip is
+    * `base`, conflict instead of retrying); `enforce` gates the staged
+    * files on the constraint set; `once` is an `(appId, batchId)` mark
+    * whose presence in the log abandons the attempt; `beforeCommit` is
+    * a test seam fired once, before the first attempt. [[run]] returns
+    * the won version, or None when an attempt abandoned. */
+  private final class Txn(verb: String, plannedV: Long = -1L,
+      rewrites: Seq[String] = Nil, base: Option[Long] = None,
+      enforce: Boolean = false, once: Option[(String, Long)] = None,
+      beforeCommit: () => Unit = () => ()) {
+    private val rewriting = rewrites.toSet
+
+    private def lostBase(b: Long) = conflict(
+      s"$verb planned on v$b but the log advanced to v${latestVersion()}")
+
+    def run(attempt: Window => Option[Action]): Option[Long] = {
+      beforeCommit()
+      loop(attempt)
     }
-    clusteredKeys.foreach { ks =>
+
+    @annotation.tailrec
+    private def loop(attempt: Window => Option[Action]): Option[Long] = {
+      val tip = latestVersion()
+      base.filter(_ != tip).foreach(b => throw lostBase(b))
+      if (once.exists { case (app, b) => lastTxn(app).exists(_ >= b) })
+        return None
+      val w = new Window(plannedV, tip)
+      if (rewriting.nonEmpty) {
+        if (!rewriting.subsetOf(resolve(Some(tip)).data.toSet))
+          throw conflict(s"$verb planned on files a concurrent commit " +
+            "removed")
+        conflictOnWindowDv(w.commits, rewrites)
+      }
+      val a = attempt(w) match {
+        case Some(a) => a
+        case None => return None
+      }
+      if (enforce) enforceConstraints(a.names)
+      if (tryCas(tip + 1, a)) {
+        afterCommit(a)
+        Some(tip + 1)
+      } else {
+        base.foreach(b => throw lostBase(b))
+        loop(attempt)
+      }
+    }
+  }
+
+  /** Sidecar upkeep and hooks after a won commit; the auto-checkpoint
+    * already ran inside [[tryCas]]. Data files are immutable, so an
+    * append's spans extend a standing sidecar. A replace or restore
+    * leaves it describing a live set that is gone, and a rewrite that
+    * removes live data files leaves stale rows: both drop it (readers
+    * fall back to the log's spans until [[buildStats]]). Meta commits,
+    * deletes and tombstone-only rewrites leave it. */
+  private def afterCommit(a: Action): Unit = {
+    val dropsLive = a.kind == "replace" || a.kind == "restore" ||
+      ((a.kind == "rewrite" || a.kind == "upsert") &&
+        a.removed.exists(!isDvName(_)))
+    if (a.kind == "append") maintainStats(a.names, a.schema)
+    else if (dropsLive) FileStats.invalidate(spark, root)
+    notifyCommit()
+  }
+
+  /** Write `a` as version `v` if the slot is free; true when this
+    * writer won it. */
+  private def tryCas(v: Long, a: Action): Boolean = {
+    val node = mapper.createObjectNode()
+    node.put("kind", a.kind)
+    if (a.changeFiles.nonEmpty) {
+      val cfArr = node.putArray("changeFiles")
+      a.changeFiles.foreach(cfArr.add)
+    }
+    a.clusteredKeys.foreach { ks =>
       node.put("clustered", true)
       node.put("clusterKeys", ks)
     }
-    constraints.foreach { cs =>
+    a.constraints.foreach { cs =>
       val cn = node.putObject("constraints")
       cs.toSeq.sortBy(_._1).foreach { case (n, p) => cn.put(n, p) }
     }
-    props.foreach { ps =>
+    a.props.foreach { ps =>
       val pn = node.putObject("props")
       ps.toSeq.sortBy(_._1).foreach { case (k, v) => pn.put(k, v) }
     }
@@ -1525,23 +1596,23 @@ final class CommitLog(spark: SparkSession, root: String) {
     }
     node.put("ts", math.max(clock(), prevTs + 1))
     val arr = node.putArray("files")
-    names.foreach(arr.add)
-    if (removed.nonEmpty) {
+    a.names.foreach(arr.add)
+    if (a.removed.nonEmpty) {
       val rarr = node.putArray("removed")
-      removed.foreach(rarr.add)
+      a.removed.foreach(rarr.add)
     }
-    txn.foreach { case (app, batch) =>
+    a.txn.foreach { case (app, batch) =>
       val t = node.putObject("txn")
       t.put("app", app)
       t.put("batch", batch)
     }
-    schema.foreach { st =>
+    a.schema.foreach { st =>
       val sn = node.putObject("schema")
       SchemaTools.schemaToMap(st).toSeq.sortBy(_._1)
         .foreach { case (n, t) => sn.put(n, t) }
     }
-    putSchemaGroups(node, schemaGroups)
-    putStats(node, stats)
+    putSchemaGroups(node, a.schemaGroups)
+    putStats(node, a.stats)
     val vf = versionFile(v)
     // Commit visibility is ATOMIC: the full payload lands in a temp
     // file first, then links/renames into the version slot in one
@@ -1614,8 +1685,7 @@ final class CommitLog(spark: SparkSession, root: String) {
       case _ => df
     }
 
-  /** Append `df` under the commit protocol. Appends commute, so the
-    * CAS-retry loop always terminates with this writer owning some
+  /** Append `df`. Appends commute, so this writer always wins some
     * version; returns it. Callers speak LOGICAL names — under active
     * column mapping the batch aligns to the physical schema first
     * ([[alignToPhysical]]). */
@@ -1623,19 +1693,8 @@ final class CommitLog(spark: SparkSession, root: String) {
     val df = alignToPhysical(input)
     val names = stage(df)
     val spans = spansOf(names, Some(df.schema))
-    var v = 0L
-    var done = false
-    while (!done) {
-      v = latestVersion() + 1
-      // inside the loop: a CHECK constraint committed mid-race fails
-      // this writer's CAS and gates the retry
-      enforceConstraints(names)
-      done = tryCas(v, "append", names, schema = Some(df.schema),
-        stats = spans)
-    }
-    maintainStats(names, Some(df.schema))
-    notifyCommit()
-    v
+    new Txn("append", enforce = true).run(_ => Some(Action("append",
+      names, schema = Some(df.schema), stats = spans))).get
   }
 
   /** Standing AUTO-COLUMN declarations: (identity specs by column —
@@ -1812,11 +1871,8 @@ final class CommitLog(spark: SparkSession, root: String) {
     var outSchema: StructType = null
     def sweep(): Unit =
       staged.foreach(nm => fs.delete(new Path(dataDir, nm), false))
-    var v = 0L
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
-      val ps = properties(Some(tip))
+    new Txn("append", enforce = true).run { w =>
+      val ps = properties(Some(w.tip))
       val bases = toAlloc.map(c => c -> hwmOf(ps, c)).toMap
       if (staged.isEmpty || bases != stagedBases) {
         // (re)allocate off the CURRENT marks and stage — a lost race
@@ -1850,7 +1906,6 @@ final class CommitLog(spark: SparkSession, root: String) {
         spans = spansOf(staged, Some(out.schema))
         outSchema = out.schema
       }
-      enforceConstraints(staged)
       val newMarks: Map[String, String] =
         toAlloc.map { c =>
           hwmKey(c) -> (bases(c) + ids(c)._2 * n).toString }.toMap ++
@@ -1859,13 +1914,9 @@ final class CommitLog(spark: SparkSession, root: String) {
               if (ids(c)._2 > 0) e > hwmOf(ps, c)
               else e < hwmOf(ps, c)) =>
           hwmKey(c) -> explicitExt(c).get.toString }
-      v = tip + 1
-      done = tryCas(v, "append", staged, schema = Some(outSchema),
-        stats = spans, props = Some(ps ++ newMarks))
-    }
-    maintainStats(staged, Some(outSchema))
-    notifyCommit()
-    v
+      Some(Action("append", staged, schema = Some(outSchema),
+        stats = spans, props = Some(ps ++ newMarks)))
+    }.get
   }
 
   /** COPY INTO — idempotent file ingest (Databricks' verb, Delta's
@@ -1991,33 +2042,25 @@ final class CommitLog(spark: SparkSession, root: String) {
       fs.delete(new Path(root, runDir), true)
     }
     ensureMetaHint() // the props fold must see this commit
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
+    new Txn("copyInto", plannedV, enforce = true).run { w =>
       // another props-carrying commit in the window may be a copy run
-      // over the same files — re-derive; if our plan shrank, re-plan
-      if ((plannedV + 1 to tip).map(commit).exists(_.props.isDefined) &&
-          !force) {
-        val still = loadedDF(tip)
+      // over the same files — re-derive; if our plan shrank, abandon
+      // and re-plan
+      val shrank = !force && w.commits.exists(_.props.isDefined) &&
+        loadedDF(w.tip)
           .map(l => toLoadDF.join(l, idCols, "left_anti").count())
-          .getOrElse(toLoad.length.toLong)
-        if (still != toLoad.length.toLong) {
-          sweep()
-          return copyInto(srcPath, format, pattern, force,
-            formatOptions, mergeSchema)
-        }
-      }
-      enforceConstraints(names)
-      val runKey = s"${CommitLog.CopyRunPrefix}$v"
-      done = tryCas(v, "append", names, schema = Some(out.schema),
-        stats = spans,
-        props = Some(properties(Some(tip)) + (runKey -> runDir)))
-      if (!done) v = latestVersion() + 1
+          .getOrElse(toLoad.length.toLong) != toLoad.length.toLong
+      if (shrank) None
+      else Some(Action("append", names, schema = Some(out.schema),
+        stats = spans, props = Some(properties(Some(w.tip)) +
+          (s"${CommitLog.CopyRunPrefix}${w.tip + 1}" -> runDir))))
+    } match {
+      case Some(v) => (v, toLoad.length.toLong, rows)
+      case None =>
+        sweep()
+        copyInto(srcPath, format, pattern, force, formatOptions,
+          mergeSchema)
     }
-    maintainStats(names, Some(out.schema))
-    notifyCommit()
-    (v, toLoad.length.toLong, rows)
   }
 
   /** Fold the COPY INTO registry: merge every run manifest into ONE
@@ -2033,14 +2076,10 @@ final class CommitLog(spark: SparkSession, root: String) {
     var staged: Option[(String, Set[String])] = None
     def sweepStaged(): Unit = staged.foreach { case (d, _) =>
       fs.delete(new Path(root, d), true) }
-    var v = 0L
-    var done = false
-    while (!done) {
-      val plannedV = latestVersion()
-      val ps = properties(Some(plannedV))
+    val v = new Txn("compactCopyRegistry").run { w =>
+      val ps = properties(Some(w.tip))
       val runs = ps.filter(_._1.startsWith(CommitLog.CopyRunPrefix))
-      if (runs.size <= 1) { sweepStaged(); return None }
-      if (!staged.exists(_._2 == runs.values.toSet)) {
+      if (runs.size > 1 && !staged.exists(_._2 == runs.values.toSet)) {
         sweepStaged()
         val dir =
           s"_copy/run-${java.util.UUID.randomUUID().toString.take(12)}"
@@ -2052,13 +2091,12 @@ final class CommitLog(spark: SparkSession, root: String) {
           .write.parquet(new Path(root, dir).toString)
         staged = Some((dir, runs.values.toSet))
       }
-      v = plannedV + 1
-      done = tryCas(v, "meta", Nil, props = Some(
-        (ps -- runs.keys) +
-          (s"${CommitLog.CopyRunPrefix}$v" -> staged.get._1)))
+      if (runs.size <= 1) None
+      else Some(Action("meta", props = Some((ps -- runs.keys) +
+        (s"${CommitLog.CopyRunPrefix}${w.tip + 1}" -> staged.get._1))))
     }
-    notifyCommit()
-    Some(v)
+    if (v.isEmpty) sweepStaged()
+    v
   }
 
   /** SCREENED append — write-time expectations on the multi-writer
@@ -2115,7 +2153,7 @@ final class CommitLog(spark: SparkSession, root: String) {
     * leaves the manifest untrusted (full-scan fallback), never
     * trusted-but-wrong. No-op when no sidecar is standing. */
   private def maintainStats(names: Seq[String],
-      schema: Option[StructType] = None): Unit =
+      schema: Option[StructType]): Unit =
     if (FileStats.trusted(spark, root)) {
       FileStats.distrust(spark, root)
       // declared-schema scan when the writer knows what it landed —
@@ -2138,21 +2176,9 @@ final class CommitLog(spark: SparkSession, root: String) {
   def replace(df: DataFrame, baseVersion: Long): Long = {
     val names = stage(df)
     val spans = spansOf(names, Some(df.schema))
-    val v = baseVersion + 1
-    // single-attempt CAS: a constraint landing after baseVersion bumps
-    // the version and the replace conflicts anyway
-    enforceConstraints(names)
-    if (latestVersion() != baseVersion ||
-        !tryCas(v, "replace", names, schema = Some(df.schema),
-          stats = spans))
-      throw new java.util.ConcurrentModificationException(
-        s"replace planned on v$baseVersion but the log advanced " +
-          s"to v${latestVersion()} — re-plan on fresh state")
-    // the spans described a live set that no longer exists; readers
-    // fall back to full listings until buildStats() re-indexes
-    FileStats.invalidate(spark, root)
-    notifyCommit()
-    v
+    new Txn("replace", base = Some(baseVersion), enforce = true)
+      .run(_ => Some(Action("replace", names, schema = Some(df.schema),
+        stats = spans))).get
   }
 
   /** OPTIMIZE — compaction as a TRANSACTION (Delta OPTIMIZE / Iceberg
@@ -2247,29 +2273,11 @@ final class CommitLog(spark: SparkSession, root: String) {
       else raw.repartition(targetFiles)
     val names = stage(packed)
     val spans = spansOf(names, Some(raw.schema))
-    val inputSet = inputs.toSet
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
-      val liveNow = resolve(Some(tip)).data.toSet
-      if (!inputSet.subsetOf(liveNow))
-        throw new java.util.ConcurrentModificationException(
-          "optimize planned on files a concurrent replace/rewrite " +
-            "removed — re-plan on fresh state")
-      // a concurrent positional delete marking the inputs: this pack
-      // read them before the marks — committing would resurrect the
-      // marked rows in the re-homed outputs
-      conflictOnWindowDv(plannedV, tip, inputs)
-      done = tryCas(v, "rewrite", names, removed = inputs ++ deadDv,
+    new Txn("optimize", plannedV, rewrites = inputs).run(_ =>
+      Some(Action("rewrite", names, removed = inputs ++ deadDv,
         schema = Some(raw.schema), stats = spans,
         clusteredKeys =
-          if (markClustered) Some(zorderBy.mkString(",")) else None)
-      if (!done) v = latestVersion() + 1
-    }
-    FileStats.invalidate(spark, root)
-    notifyCommit()
-    Some(v)
+          if (markClustered) Some(zorderBy.mkString(",")) else None)))
   }
 
   /** The table's declared clustering keys
@@ -2343,25 +2351,19 @@ final class CommitLog(spark: SparkSession, root: String) {
       // every mark targets a dead file — nothing to rewrite, but the
       // dv files still join into every read: retire them outright
       val dvSet = dv.toSet
-      var v = latestVersion() + 1
-      var done = false
-      while (!done) {
+      return new Txn("reorgPurge").run { w =>
         // a concurrent commit may have retired (or re-homed) some of
         // these tombstones already — a double-remove manifest would
         // corrupt history/vacuum accounting
-        if (!dvSet.subsetOf(resolve(None).tombstones.toSet))
-          throw new java.util.ConcurrentModificationException(
-            "reorgPurge planned on tombstones a concurrent commit " +
-              "retired — re-plan on fresh state")
-        done = tryCas(v, "rewrite", Nil, removed = dv)
-        if (!done) v = latestVersion() + 1
+        if (!dvSet.subsetOf(resolve(Some(w.tip)).tombstones.toSet))
+          throw conflict("reorgPurge planned on tombstones a concurrent " +
+            "commit retired")
+        Some(Action("rewrite", removed = dv))
       }
-      notifyCommit()
-      return Some(v)
     }
     // clustering-aware: on a CLUSTER BY table the purged rows re-sort
     // on the declared keys and the outputs mark clustered (optimize's
-    // inner CAS loop re-validates input liveness per retry)
+    // transaction re-validates input liveness on every attempt)
     val keys = clusterKeys()
     optimize(if (targetFiles > 0) targetFiles else marked.size,
       zorderBy = keys, onlyFiles = Some(marked.toSet), force = true,
@@ -2390,7 +2392,7 @@ final class CommitLog(spark: SparkSession, root: String) {
     * broadcast.
     *
     * Concurrency is Delta's ConcurrentAppend/ConcurrentDelete logic,
-    * validated inside the CAS retry loop:
+    * validated on every commit attempt:
     *  - planned inputs no longer live (a replace/rewrite/competing
     *    upsert took them) — CONFLICT, re-plan;
     *  - a commit landed after planning whose files' LOG-CARRIED spans
@@ -2578,59 +2580,21 @@ final class CommitLog(spark: SparkSession, root: String) {
     val names = stage(out)
     val spans = spansOf(names, Some(out.schema))
     val kind = if (touched.isEmpty) "append" else "upsert"
-    val touchedSet = touched.toSet
-    beforeCommit()
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      // same-app race inside the retry loop: if a twin writer's
-      // (appId, batchId) landed first, skip instead of double-merging
-      txn.foreach { case (a, b) =>
-        if (lastTxn(a).exists(_ >= b)) return None
-      }
-      val tip = latestVersion()
-      if (touched.nonEmpty &&
-          !touchedSet.subsetOf(resolve(Some(tip)).data.toSet))
-        throw new java.util.ConcurrentModificationException(
-          "upsert planned on files a concurrent commit removed — " +
-            "re-plan on fresh state")
-      // Conflict scan over the window (plannedV, tip] — run for
-      // INSERT-ONLY merges too (Delta validates them the same way: a
-      // concurrent commit landing matched keys between planning and
-      // CAS would duplicate them):
-      //  - restore/clone re-home visibility wholesale — always a
-      //    conflict, their spans prove nothing about merge semantics;
-      //  - append/upsert/replace outputs commute iff every file's
-      //    log-carried span is provably disjoint from the batch's key
-      //    envelope on SOME key column;
-      //  - rewrites add no rows (their outputs carry exactly their
-      //    inputs' rows, all visible at plan time) — skipped;
-      //  - a MOR `delete` landing in the window holds keys that
-      //    subtract at read time: if any batch key clashes with its
-      //    tombstones, committing would land rows the next read
-      //    silently erases (the standing-tombstone guard, raced) —
-      //    conflict; disjoint deletes commute.
-      val window = (plannedV + 1 to tip).map(commit)
-      window.collectFirst {
-        case c if c.kind == "restore" || c.kind == "clone" =>
-          s"${c.kind} v${c.version} re-homed visibility"
-      }.orElse(window
-        .filter(c => c.kind == "append" || c.kind == "upsert" ||
-          c.kind == "replace")
-        .flatMap(c => c.files.map(f => c -> f))
-        .collectFirst { case (c, f) if !keyBounds.exists {
-            case (k, b) => c.stats.get(f)
-              .flatMap(_.cols.get(k)) match {
-                case Some((mn, mx)) =>
-                  !FileStats.spanIntersects(mn, mx, b)
-                case None => false
-              }
-          } => s"${c.kind} v${c.version} landed rows not provably " +
-            "disjoint from the merge keys (ConcurrentAppend)" })
-        .foreach(why =>
-          throw new java.util.ConcurrentModificationException(
-            s"$why — re-plan on fresh state"))
-      val newKeyed = window.filter(_.kind == "delete")
+    // a twin writer's landed (appId, batchId) skips instead of
+    // double-merging
+    new Txn("upsert", plannedV, rewrites = touched, enforce = true,
+        once = txn, beforeCommit = beforeCommit).run { w =>
+      // Conflict rules over the window — run for INSERT-ONLY merges too
+      // (Delta validates them the same way: a concurrent commit landing
+      // matched keys between planning and CAS would duplicate them):
+      // restore/clone ([[reHomed]]), ConcurrentAppend
+      // ([[concurrentAppend]]), and a MOR `delete` whose tombstones
+      // hold a batch key — committing would land rows the next read
+      // silently erases (the standing-tombstone guard, raced);
+      // disjoint deletes commute.
+      reHomed(w.commits).orElse(concurrentAppend(w.commits, keyBounds))
+        .foreach(why => throw conflict(why))
+      val newKeyed = w.commits.filter(_.kind == "delete")
         .flatMap(_.files).filterNot(isDvName)
       if (newKeyed.nonEmpty) {
         val tsPaths = newKeyed.map(dataPath)
@@ -2641,25 +2605,13 @@ final class CommitLog(spark: SparkSession, root: String) {
           ts.columns.map(k => batchAligned(k) <=> ts(k)).reduce(_ && _),
           "left_semi").isEmpty
         if (clash)
-          throw new java.util.ConcurrentModificationException(
-            "a concurrent delete holds keys this merge writes " +
-              "(ConcurrentDelete) — re-plan on fresh state")
+          throw conflict("a concurrent delete holds keys this merge " +
+            "writes (ConcurrentDelete)")
       }
-      // a concurrent POSITIONAL delete marking files this merge is
-      // re-homing: the merge read its inputs before the marks — the
-      // re-homed rows would resurrect them. Marks on untouched files
-      // commute (their positions stay live).
-      conflictOnWindowDv(plannedV, tip, touched)
-      enforceConstraints(names)
-      done = tryCas(v, kind, names, removed = touched, txn = txn,
+      Some(Action(kind, names, removed = touched, txn = txn,
         schema = Some(out.schema), stats = spans,
-        changeFiles = changeNames)
-      if (!done) v = latestVersion() + 1
-    }
-    if (touched.nonEmpty) FileStats.invalidate(spark, root)
-    else maintainStats(names)
-    notifyCommit()
-    Some((v, touched.size))
+        changeFiles = changeNames))
+    }.map((_, touched.size))
     } finally batchTmp.foreach(p => fs.delete(p, true))
   }
 
@@ -3243,50 +3195,22 @@ final class CommitLog(spark: SparkSession, root: String) {
       return (plannedV, 0)
     }
     val kind = if (touched.isEmpty) "append" else "upsert"
-    val touchedSet = touched.toSet
     val strict = notMatchedBySource.nonEmpty
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
-      val ps = properties(Some(tip))
+    val v = new Txn("merge", plannedV, rewrites = touched,
+        enforce = true).run { w =>
+      val ps = properties(Some(w.tip))
       val bases = idToAlloc.map(c => c -> hwmOf(ps, c)).toMap
       if (bases != stagedBases) restage(bases)
-      if (touched.nonEmpty &&
-          !touchedSet.subsetOf(resolve(Some(tip)).data.toSet))
-        throw new java.util.ConcurrentModificationException(
-          "merge planned on files a concurrent commit removed — " +
-            "re-plan on fresh state")
-      val window = (plannedV + 1 to tip).map(commit)
-      window.collectFirst {
-        case c if c.kind == "restore" || c.kind == "clone" =>
-          s"${c.kind} v${c.version} re-homed visibility"
-        case c if strict && (c.kind == "append" || c.kind == "upsert" ||
-            c.kind == "replace") =>
+      // upsert's rules, except that under NOT MATCHED BY SOURCE any
+      // concurrent data commit conflicts, and any keyed delete does
+      // (written keys are not enumerable pre-commit)
+      reHomed(w.commits)
+        .orElse(if (!strict) None else w.commits.find(addsRows).map(c =>
           s"${c.kind} v${c.version} landed rows this merge's NOT " +
-            "MATCHED BY SOURCE examination never saw"
-      }.orElse(window
-        .filter(c => c.kind == "append" || c.kind == "upsert" ||
-          c.kind == "replace")
-        .flatMap(c => c.files.map(f => c -> f))
-        .collectFirst { case (c, f) if !keyBounds.exists {
-            case (k, b) => c.stats.get(f).flatMap(_.cols.get(k)) match {
-              case Some((mn, mx)) =>
-                !FileStats.spanIntersects(mn, mx, b)
-              case None => false
-            }
-          } => s"${c.kind} v${c.version} landed rows not provably " +
-            "disjoint from the merge keys (ConcurrentAppend)" })
-        .foreach(why =>
-          throw new java.util.ConcurrentModificationException(
-            s"$why — re-plan on fresh state"))
-      if (window.exists(c => c.kind == "delete" &&
-          c.files.exists(f => !isDvName(f))))
-        throw new java.util.ConcurrentModificationException(
-          "a concurrent keyed delete landed in the merge window " +
-            "(ConcurrentDelete) — re-plan on fresh state")
-      conflictOnWindowDv(plannedV, tip, touched)
-      enforceConstraints(names)
+            "MATCHED BY SOURCE examination never saw"))
+        .orElse(concurrentAppend(w.commits, keyBounds))
+        .orElse(keyedDelete(w.commits))
+        .foreach(why => throw conflict(why))
       val newMarks: Map[String, String] =
         (if (allocN > 0) idToAlloc.map { c =>
           hwmKey(c) -> (bases(c) + idCols(c)._2 * allocN).toString
@@ -3296,15 +3220,11 @@ final class CommitLog(spark: SparkSession, root: String) {
               if (idCols(c)._2 > 0) e > hwmOf(ps, c)
               else e < hwmOf(ps, c)) =>
           hwmKey(c) -> explicitExt(c).get.toString }
-      done = tryCas(v, kind, names, removed = touched,
+      Some(Action(kind, names, removed = touched,
         schema = Some(outSchema), stats = spans,
         props = if (idCols.isEmpty) None else Some(ps ++ newMarks),
-        changeFiles = changeNames)
-      if (!done) v = latestVersion() + 1
-    }
-    if (touched.nonEmpty) FileStats.invalidate(spark, root)
-    else maintainStats(names)
-    notifyCommit()
+        changeFiles = changeNames))
+    }.get
     (v, touched.size)
     } finally srcTmp.foreach(p => fs.delete(p, true))
   }
@@ -3354,23 +3274,10 @@ final class CommitLog(spark: SparkSession, root: String) {
           .withColumn("_op", lit("delete")))
     val names = stage(out)
     val spans = spansOf(names, Some(out.schema))
-    val touchedSet = touched.toSet
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
-      if (!touchedSet.subsetOf(resolve(Some(tip)).data.toSet))
-        throw new java.util.ConcurrentModificationException(
-          "deleteWhere planned on files a concurrent commit removed " +
-            "— re-plan on fresh state")
-      conflictOnWindowDv(plannedV, tip, touched)
-      done = tryCas(v, "upsert", names, removed = touched,
+    val v = new Txn("deleteWhere", plannedV, rewrites = touched).run(_ =>
+      Some(Action("upsert", names, removed = touched,
         schema = Some(out.schema), stats = spans,
-        changeFiles = changeNames)
-      if (!done) v = latestVersion() + 1
-    }
-    FileStats.invalidate(spark, root)
-    notifyCommit()
+        changeFiles = changeNames))).get
     (v, touched.size)
   }
 
@@ -3474,17 +3381,8 @@ final class CommitLog(spark: SparkSession, root: String) {
             .unionByName(ins))
       }
     val kind = if (touched.isEmpty) "append" else "upsert"
-    val touchedSet = touched.toSet
-    beforeCommit() // test seam: staged, first CAS attempt not yet made
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
-      if (touched.nonEmpty &&
-          !touchedSet.subsetOf(resolve(Some(tip)).data.toSet))
-        throw new java.util.ConcurrentModificationException(
-          "replaceWhere planned on files a concurrent commit removed " +
-            "— re-plan on fresh state")
+    val v = new Txn("replaceWhere", plannedV, rewrites = touched,
+        enforce = true, beforeCommit = beforeCommit).run { w =>
       // the band swap examined EVERY in-band row at planning time: a
       // concurrent data commit whose files' spans cannot PROVE zero
       // in-band rows landed rows this replace never saw — committing
@@ -3493,41 +3391,24 @@ final class CommitLog(spark: SparkSession, root: String) {
       // commute; restore/clone re-home visibility wholesale; a keyed
       // delete's written keys are not enumerable pre-commit —
       // conservative conflict (merge's discipline).
-      val window = (plannedV + 1 to tip).map(commit)
-      window.collectFirst {
-        case c if c.kind == "restore" || c.kind == "clone" =>
-          s"${c.kind} v${c.version} re-homed visibility"
-        case c if c.kind == "delete" && c.files.exists(f => !isDvName(f)) =>
-          s"keyed delete v${c.version} landed in the window " +
-            "(ConcurrentDelete)"
-      }.orElse {
-        val newFiles = window
-          .filter(c => c.kind == "append" || c.kind == "upsert" ||
-            c.kind == "replace")
-          .flatMap(c => c.files.map(f => c -> f))
-        val spanOfW: Map[String, FileSpans] = newFiles.map {
-          case (c, f) => f -> c.stats.getOrElse(f,
-            CommitLog.FileSpans(-1L, Map.empty))
-        }.toMap
-        if (newFiles.isEmpty) None
-        else prunedLive(predicate, newFiles.map(_._2), spanOfW) match {
-          case Some(cands) if cands.isEmpty => None // provably out-of-band
-          case _ => Some("a concurrent commit landed rows not " +
-            "provably outside the replaced band (ConcurrentAppend)")
-        }
-      }.foreach(why =>
-        throw new java.util.ConcurrentModificationException(
-          s"$why — re-plan on fresh state"))
-      conflictOnWindowDv(plannedV, tip, touched)
-      enforceConstraints(names)
-      done = tryCas(v, kind, names, removed = touched,
+      val newFiles = windowAdds(w.commits)
+      val spanOfW: Map[String, FileSpans] = newFiles.map {
+        case (c, f) => f -> c.stats.getOrElse(f,
+          CommitLog.FileSpans(-1L, Map.empty))
+      }.toMap
+      reHomed(w.commits)
+        .orElse(keyedDelete(w.commits))
+        .orElse(if (newFiles.isEmpty) None
+          else prunedLive(predicate, newFiles.map(_._2), spanOfW) match {
+            case Some(cands) if cands.isEmpty => None // provably out-of-band
+            case _ => Some("a concurrent commit landed rows not " +
+              "provably outside the replaced band (ConcurrentAppend)")
+          })
+        .foreach(why => throw conflict(why))
+      Some(Action(kind, names, removed = touched,
         schema = Some(out.schema), stats = spans,
-        changeFiles = changeNames)
-      if (!done) v = latestVersion() + 1
-    }
-    if (touched.nonEmpty) FileStats.invalidate(spark, root)
-    else maintainStats(names)
-    notifyCommit()
+        changeFiles = changeNames))
+    }.get
     (v, touched.size)
   }
 
@@ -3587,17 +3468,12 @@ final class CommitLog(spark: SparkSession, root: String) {
     val markedFiles = SchemaTools.distinctStrings(
       readerFor(names.map(dataPath)).parquet(names.map(dataPath): _*),
       "__dv_file").toSet
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      if (!markedFiles.subsetOf(resolve(None).data.toSet))
-        throw new java.util.ConcurrentModificationException(
-          "deleteWhereMor marked positions in files a concurrent " +
-            "commit re-homed — re-plan on fresh state")
-      done = tryCas(v, "delete", names, stats = spans)
-      if (!done) v = latestVersion() + 1
-    }
-    notifyCommit()
+    val v = new Txn("deleteWhereMor").run { w =>
+      if (!markedFiles.subsetOf(resolve(Some(w.tip)).data.toSet))
+        throw conflict("deleteWhereMor marked positions in files a " +
+          "concurrent commit re-homed")
+      Some(Action("delete", names, stats = spans))
+    }.get
     (v, nMarked)
   }
 
@@ -3627,23 +3503,66 @@ final class CommitLog(spark: SparkSession, root: String) {
       dest
     }
 
-  /** Throw if a positional-delete commit in `(plannedV, tip]` marks
-    * any of `rewriting` — the rewrite read those files before the
-    * marks, so committing would resurrect the marked rows. */
-  private def conflictOnWindowDv(plannedV: Long, tip: Long,
+  /** Throw if a positional-delete commit in `window` marks any of
+    * `rewriting` — the rewrite read those files before the marks, so
+    * committing would resurrect the marked rows. Marks on files the
+    * commit does not rewrite commute (their positions stay live). */
+  private def conflictOnWindowDv(window: Seq[Commit],
       rewriting: Seq[String]): Unit = {
-    if (tip <= plannedV || rewriting.isEmpty) return
-    val newDv = (plannedV + 1 to tip).map(commit)
+    val newDv = window
       .filter(_.kind == "delete").flatMap(_.files).filter(isDvName)
     if (newDv.nonEmpty &&
         !readerFor(newDv.map(dataPath)).parquet(newDv.map(dataPath): _*)
           .filter(org.apache.spark.sql.functions.col("__dv_file")
             .isin(rewriting: _*))
           .isEmpty)
-      throw new java.util.ConcurrentModificationException(
-        "a concurrent positional delete marked files this rewrite " +
-          "re-homes — re-plan on fresh state")
+      throw conflict("a concurrent positional delete marked files this " +
+        "rewrite re-homes")
   }
+
+  /** The restore/clone rule of the keyed and band verbs: a restore or
+    * a clone in the window re-homes visibility wholesale, so its spans
+    * prove nothing about what the verb examined — always a conflict. */
+  private def reHomed(window: Seq[Commit]): Option[String] =
+    window.collectFirst {
+      case c if c.kind == "restore" || c.kind == "clone" =>
+        s"${c.kind} v${c.version} re-homed visibility"
+    }
+
+  /** A keyed MOR delete in the window, for the verbs that cannot
+    * enumerate the keys they write before the commit: conservatively a
+    * conflict (ConcurrentDelete). */
+  private def keyedDelete(window: Seq[Commit]): Option[String] =
+    window.collectFirst {
+      case c if c.kind == "delete" && c.files.exists(!isDvName(_)) =>
+        s"keyed delete v${c.version} landed in the window " +
+          "(ConcurrentDelete)"
+    }
+
+  /** Whether `c` lands rows a planned verb never saw (rewrites add
+    * none — their outputs carry exactly their inputs' rows). */
+  private def addsRows(c: Commit): Boolean =
+    c.kind == "append" || c.kind == "upsert" || c.kind == "replace"
+
+  /** The data files the window's row-adding commits added, with their
+    * commit: what a ConcurrentAppend rule examines. */
+  private def windowAdds(window: Seq[Commit]): Seq[(Commit, String)] =
+    window.filter(addsRows).flatMap(c => c.files.map(c -> _))
+
+  /** ConcurrentAppend for a keyed verb: the first window commit that
+    * added a file whose log-carried spans cannot prove it disjoint from
+    * the batch's key envelope on SOME key column — its rows may match
+    * keys the verb never saw. Provably disjoint appends commute (the
+    * partition-disjointness rule, served by per-file spans). */
+  private def concurrentAppend(window: Seq[Commit],
+      keyBounds: Map[String, FileStats.ColBound]): Option[String] =
+    windowAdds(window).collectFirst { case (c, f) if !keyBounds.exists {
+        case (k, b) => c.stats.get(f).flatMap(_.cols.get(k)) match {
+          case Some((mn, mx)) => !FileStats.spanIntersects(mn, mx, b)
+          case None => false
+        }
+      } => s"${c.kind} v${c.version} landed rows not provably " +
+        "disjoint from the merge keys (ConcurrentAppend)" }
 
   /** Row-level UPDATE SET ... WHERE as ONE atomic copy-on-write commit
     * (the SQL DML surface's update, `deleteWhere`'s sibling): span-
@@ -3781,25 +3700,11 @@ final class CommitLog(spark: SparkSession, root: String) {
       }
     val names = stage(out)
     val spans = spansOf(names, Some(out.schema))
-    val touchedSet = touched.toSet
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      val tip = latestVersion()
-      if (!touchedSet.subsetOf(resolve(Some(tip)).data.toSet))
-        throw new java.util.ConcurrentModificationException(
-          "updateWhere planned on files a concurrent commit removed " +
-            "— re-plan on fresh state")
-      conflictOnWindowDv(plannedV, tip, touched)
-      // assignments can violate CHECK constraints; gate per attempt
-      enforceConstraints(names)
-      done = tryCas(v, "upsert", names, removed = touched,
-        schema = Some(out.schema), stats = spans,
-        changeFiles = changeNames)
-      if (!done) v = latestVersion() + 1
-    }
-    FileStats.invalidate(spark, root)
-    notifyCommit()
+    // assignments can violate CHECK constraints: enforced
+    val v = new Txn("updateWhere", plannedV, rewrites = touched,
+      enforce = true).run(_ => Some(Action("upsert", names,
+        removed = touched, schema = Some(out.schema), stats = spans,
+        changeFiles = changeNames))).get
     (v, touched.size)
   }
 
@@ -3874,35 +3779,24 @@ final class CommitLog(spark: SparkSession, root: String) {
   def setProperties(kv: Map[String, String]): Long = {
     require(kv.nonEmpty, "nothing to set")
     ensureMetaHint() // before the CAS — see addConstraint
-    var done = false
-    var v = 0L
-    while (!done) {
-      val plannedV = latestVersion()
-      v = plannedV + 1
-      done = tryCas(v, "meta", Nil,
-        props = Some(properties(Some(plannedV)) ++ kv))
-    }
-    notifyCommit()
-    v
+    new Txn("setProperties").run(w => Some(Action("meta",
+      props = Some(properties(Some(w.tip)) ++ kv)))).get
   }
 
   /** UNSET TBLPROPERTIES [IF EXISTS]: one meta commit minus the keys. */
   def unsetProperties(keys: Seq[String], ifExists: Boolean = false)
       : Long = {
-    var done = false
-    var v = 0L
-    while (!done) {
-      val plannedV = latestVersion()
-      val cur = properties(Some(plannedV))
+    var tip = 0L
+    new Txn("unsetProperties").run { w =>
+      tip = w.tip
+      val cur = properties(Some(w.tip))
       val missing = keys.filterNot(cur.contains)
       require(ifExists || missing.isEmpty,
         s"no such properties: ${missing.mkString(", ")}")
-      if ((cur -- keys) == cur) return plannedV // no-op burns no commit
-      v = plannedV + 1
-      done = tryCas(v, "meta", Nil, props = Some(cur -- keys))
-    }
-    notifyCommit()
-    v
+      // a no-op burns no commit
+      if ((cur -- keys) == cur) None
+      else Some(Action("meta", props = Some(cur -- keys)))
+    }.getOrElse(tip)
   }
 
   private def ensureMetaHint(): Unit =
@@ -3930,14 +3824,11 @@ final class CommitLog(spark: SparkSession, root: String) {
     // committed-but-invisible constraint set (and never a racing
     // append that skips enforcement of a just-landed constraint)
     ensureMetaHint()
-    var done = false
-    var v = 0L
-    while (!done) {
-      val plannedV = latestVersion()
-      val cur = constraints(Some(plannedV))
+    new Txn("addConstraint").run { w =>
+      val cur = constraints(Some(w.tip))
       require(!cur.contains(name),
         s"constraint $name already stands: ${cur(name)}")
-      val r = resolve(Some(plannedV))
+      val r = resolve(Some(w.tip))
       if (r.data.nonEmpty) {
         val bad = assembleRead(r, None)
           .filter(not(coalesce(expr(predicate), lit(false))))
@@ -3945,12 +3836,8 @@ final class CommitLog(spark: SparkSession, root: String) {
         require(bad == 0L,
           s"cannot add CHECK $name: live data violates $predicate")
       }
-      v = plannedV + 1
-      done = tryCas(v, "meta", Nil,
-        constraints = Some(cur + (name -> predicate)))
-    }
-    notifyCommit()
-    v
+      Some(Action("meta", constraints = Some(cur + (name -> predicate))))
+    }.get
   }
 
   /** NOT NULL invariants (Delta's per-column invariants): recorded
@@ -3988,25 +3875,18 @@ final class CommitLog(spark: SparkSession, root: String) {
       .map(_.stripPrefix(CommitLog.NotNullPrefix)).sorted
 
   /** DROP CONSTRAINT name — one meta commit with the reduced set. */
-  def dropConstraint(name: String): Long = {
-    var done = false
-    var v = 0L
-    while (!done) {
-      val plannedV = latestVersion()
-      val cur = constraints(Some(plannedV))
+  def dropConstraint(name: String): Long =
+    new Txn("dropConstraint").run { w =>
+      val cur = constraints(Some(w.tip))
       require(cur.contains(name), s"no such constraint: $name")
-      v = plannedV + 1
-      done = tryCas(v, "meta", Nil, constraints = Some(cur - name))
-    }
-    notifyCommit()
-    v
-  }
+      Some(Action("meta", constraints = Some(cur - name)))
+    }.get
 
   /** Enforce the CURRENT constraint set over freshly-staged files —
-    * called inside every data-adding commit's retry loop, so the set
-    * read is at most one commit behind the CAS it gates (a meta commit
-    * interleaving between the check and the CAS bumps the version and
-    * forces this writer around the loop, where it re-checks). Free on
+    * run by [[Txn]] on every attempt of a data-adding commit, so the
+    * set read is at most one commit behind the CAS it gates (a meta
+    * commit interleaving between the check and the CAS takes the slot
+    * and forces another attempt, which re-checks). Free on
     * constraint-free tables (one marker `exists`). Violation throws;
     * the staged files become vacuum debris. */
   private def enforceConstraints(names: Seq[String]): Unit = {
@@ -4048,19 +3928,12 @@ final class CommitLog(spark: SparkSession, root: String) {
     require(toVersion >= 1 && toVersion <= plannedV,
       s"no committed version $toVersion to restore to")
     val target = resolve(Some(toVersion))
-    beforeCommit()
-    val v = plannedV + 1
-    if (latestVersion() != plannedV ||
-        !tryCas(v, "restore", target.data, removed = target.tombstones,
-          stats = target.spanOf, schemaGroups = target.schemaOf))
-      throw new java.util.ConcurrentModificationException(
-        s"restore planned on v$plannedV but the log advanced to " +
-          s"v${latestVersion()} — re-plan on fresh state")
-    // sidecar rows may describe the abandoned tip's files; the
-    // restored spans ride the manifest, so readers stay pruned
-    FileStats.invalidate(spark, root)
-    notifyCommit()
-    v
+    // the restored spans ride the manifest, so readers stay pruned
+    // after the sidecar drops
+    new Txn("restore", base = Some(plannedV), beforeCommit = beforeCommit)
+      .run(_ => Some(Action("restore", target.data,
+        removed = target.tombstones, stats = target.spanOf,
+        schemaGroups = target.schemaOf))).get
   }
 
   /** SCREENED MERGE — [[appendScreened]]'s write-time expectations
@@ -4137,29 +4010,34 @@ final class CommitLog(spark: SparkSession, root: String) {
     val out = dest.fs.create(dest.baseMarker, false)
     try out.write(mapper.writeValueAsBytes(marker))
     finally out.close()
-    // column-mapping marker rides along (renames/drops stay applied)
+    foundClone(dest, destRoot, r)
+  }
+
+  /** A clone's founding commit, v1 of the empty `dest` (refused if
+    * another writer claimed it). The column-mapping marker rides along
+    * (renames/drops stay applied). CHECK constraints, table properties
+    * and the COPY INTO registry travel too — TABLE metadata, not
+    * history — so a clone cannot accept writes the source's
+    * constraints forbid, and strategy properties like delete.mode keep
+    * governing it. The manifest carries `r`'s tombstones, per-file
+    * schema groups and spans. */
+  private def foundClone(dest: CommitLog, destRoot: String,
+      r: Resolved): CommitLog = {
     val srcSchema = new Path(root, "_schema.json")
     if (fs.exists(srcSchema)) {
       val o = dest.fs.create(new Path(destRoot, "_schema.json"), true)
-      try o.write(
-        TimeFly.readText(fs, srcSchema).getBytes("UTF-8"))
+      try o.write(TimeFly.readText(fs, srcSchema).getBytes("UTF-8"))
       finally o.close()
     }
-    // CHECK constraints and table properties travel with the clone
-    // (they are TABLE metadata, not history) — the founding commit
-    // carries both payloads, so a clone cannot accept writes the
-    // source's constraints forbid, and strategy properties like
-    // delete.mode keep governing the clone
     val srcCons = constraints(None)
     val srcProps = properties(None)
     copyCopyRegistry(srcProps, destRoot, dest)
     if (srcCons.nonEmpty || srcProps.nonEmpty) dest.ensureMetaHint()
-    if (!dest.tryCas(1L, "clone", r.data, removed = r.tombstones,
+    new dest.Txn(s"clone into $destRoot", base = Some(0L)).run(_ =>
+      Some(Action("clone", r.data, removed = r.tombstones,
         stats = r.spanOf, schemaGroups = r.schemaOf,
         constraints = Some(srcCons).filter(_.nonEmpty),
-        props = Some(srcProps).filter(_.nonEmpty)))
-      throw new java.util.ConcurrentModificationException(
-        s"clone destination $destRoot claimed v1 concurrently")
+        props = Some(srcProps).filter(_.nonEmpty))))
     dest
   }
 
@@ -4229,24 +4107,7 @@ final class CommitLog(spark: SparkSession, root: String) {
             false, true, hc)
         }
     }
-    // column-mapping marker rides along (renames/drops stay applied)
-    val srcSchema2 = new Path(root, "_schema.json")
-    if (fs.exists(srcSchema2)) {
-      val o = dest.fs.create(new Path(destRoot, "_schema.json"), true)
-      try o.write(TimeFly.readText(fs, srcSchema2).getBytes("UTF-8"))
-      finally o.close()
-    }
-    val srcCons = constraints(None)
-    val srcProps = properties(None)
-    copyCopyRegistry(srcProps, destRoot, dest)
-    if (srcCons.nonEmpty || srcProps.nonEmpty) dest.ensureMetaHint()
-    if (!dest.tryCas(1L, "clone", r.data, removed = r.tombstones,
-        stats = r.spanOf, schemaGroups = r.schemaOf,
-        constraints = Some(srcCons).filter(_.nonEmpty),
-        props = Some(srcProps).filter(_.nonEmpty)))
-      throw new java.util.ConcurrentModificationException(
-        s"clone destination $destRoot claimed v1 concurrently")
-    dest
+    foundClone(dest, destRoot, r)
   }
 
   /** Highest batch id committed for `appId`, scanning the newest
@@ -4289,18 +4150,10 @@ final class CommitLog(spark: SparkSession, root: String) {
     if (lastTxn(appId).exists(_ >= batchId)) return None
     val names = stage(df)
     val spans = spansOf(names, Some(df.schema))
-    var v = latestVersion() + 1
-    var done = false
-    while (!done) {
-      if (lastTxn(appId).exists(_ >= batchId)) return None
-      enforceConstraints(names)
-      done = tryCas(v, "append", names, txn = Some((appId, batchId)),
-        schema = Some(df.schema), stats = spans)
-      if (!done) v = latestVersion() + 1
-    }
-    maintainStats(names, Some(df.schema))
-    notifyCommit()
-    Some(v)
+    val mark = Some((appId, batchId))
+    new Txn("appendOnce", enforce = true, once = mark).run(_ =>
+      Some(Action("append", names, txn = mark, schema = Some(df.schema),
+        stats = spans)))
   }
 
   /** Rename a column WITHOUT rewriting data — the commit-log surface
@@ -4817,6 +4670,21 @@ object CommitLog {
     * is visible. */
   final case class FileSpans(nRows: Long,
       cols: Map[String, (Option[FileStats.SpanV], Option[FileStats.SpanV])])
+
+  /** One commit's payload, written field for field by the class's
+    * CAS: the kind, the files it adds (`names`) and removes, and the
+    * optional manifest fields a [[Commit]] reads back. */
+  private final case class Action(kind: String,
+      names: Seq[String] = Nil,
+      removed: Seq[String] = Nil,
+      txn: Option[(String, Long)] = None,
+      schema: Option[StructType] = None,
+      stats: Map[String, FileSpans] = Map.empty,
+      schemaGroups: Map[String, StructType] = Map.empty,
+      constraints: Option[Map[String, String]] = None,
+      props: Option[Map[String, String]] = None,
+      changeFiles: Seq[String] = Nil,
+      clusteredKeys: Option[String] = None)
 
   final case class Commit(version: Long, kind: String,
       files: Seq[String], removed: Seq[String] = Nil,

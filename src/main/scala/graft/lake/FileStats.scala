@@ -949,29 +949,75 @@ object FileStats {
   ): Option[Seq[String]] =
     probe(spark, path, bounds, Map.empty).map(_.kept)
 
-  /** Typed per-column bounds for a frame's OWN values (one agg over
-    * `frame`): the probe shape key-range pruning wants — a merge
-    * batch's key spread, a delta batch's time window. Columns whose
-    * type has no span domain (or that are all-null) get no entry. */
+  /** Typed per-column bounds for a frame's OWN values: the probe shape
+    * key-range pruning wants — a merge batch's key spread, a delta
+    * batch's time window. Columns whose type has no span domain (or
+    * that are all-null) get no entry. One job with no exchange: each
+    * task folds its rows' min/max and `reduce` folds the tasks'
+    * ([[SchemaTools.distinctStrings]]' shape), where a global agg plans
+    * a partial agg, an exchange and a final agg — two jobs under
+    * adaptive execution on a multi-partition frame. The fold orders
+    * like Spark's min/max (binary UTF-8 strings; doubles with NaN above
+    * every value), and strings truncate like a span build: as a PROBE
+    * the truncated min stays a valid lower bound (prefix <= full) and
+    * the truncated max is re-truncated on comparison anyway. */
   def frameBounds(frame: DataFrame, cols: Seq[String])
       : Map[String, ColBound] = {
     val fields = cols.flatMap(c =>
       indexableFields(frame.schema).find(_.name == c))
     if (fields.isEmpty) return Map.empty
-    val aggs = typedSpanAggs(fields)
-    val r = frame.agg(aggs.head, aggs.tail: _*).head()
-    fields.flatMap { f =>
-      decodeSpan(r, f) match {
-        case (Some(NumV(lo)), Some(NumV(hi))) =>
+    val ext = new Extremes(fields.map(_.dataType == StringType).toArray)
+    val perTask = frame
+      .select(fields.map(f =>
+        if (f.dataType == StringType) col(f.name) else numProj(f)): _*)
+      .mapPartitions(rows => Iterator.single(ext.of(rows)))(
+        org.apache.spark.sql.Encoders.kryo[Array[Any]])
+    val merge: (Array[Any], Array[Any]) => Array[Any] = ext.merge
+    val r =
+      try perTask.reduce(merge)
+      catch { case _: UnsupportedOperationException => return Map.empty }
+    fields.zipWithIndex.flatMap { case (f, i) =>
+      (r(2 * i), r(2 * i + 1)) match {
+        case (lo: Double, hi: Double) =>
           Some(f.name -> ColBound(loNum = Some(lo), hiNum = Some(hi)))
-        case (Some(StrV(lo)), Some(StrV(hi))) =>
-          // the agg truncates like a span build: as a PROBE the
-          // truncated min stays a valid lower bound (prefix <= full)
-          // and the truncated max is re-truncated on comparison anyway
-          Some(f.name -> ColBound(loStr = Some(lo), hiStr = Some(hi)))
+        case (lo: String, hi: String) =>
+          Some(f.name -> ColBound(loStr = Some(truncProbe(lo)),
+            hiStr = Some(truncProbe(hi))))
         case _ => None
       }
     }.toMap
+  }
+
+  /** Running (min, max) of [[frameBounds]]' columns, ordered like
+    * Spark's min/max: binary UTF-8 for strings, doubles with NaN above
+    * every value. Column i's sides sit at slots 2i and 2i + 1; nulls
+    * skip. */
+  private final class Extremes(isStr: Array[Boolean]) extends Serializable {
+    private def cmp(i: Int, a: Any, b: Any): Int =
+      if (isStr(i)) utf8Cmp(a.asInstanceOf[String], b.asInstanceOf[String])
+      else org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double])
+
+    private def widen(acc: Array[Any], i: Int, lo: Any, hi: Any): Unit = {
+      if (lo != null && (acc(2 * i) == null || cmp(i, lo, acc(2 * i)) < 0))
+        acc(2 * i) = lo
+      if (hi != null && (acc(2 * i + 1) == null ||
+          cmp(i, hi, acc(2 * i + 1)) > 0))
+        acc(2 * i + 1) = hi
+    }
+
+    def of(rows: Iterator[Row]): Array[Any] = {
+      val acc = new Array[Any](2 * isStr.length)
+      rows.foreach(r =>
+        isStr.indices.foreach(i => widen(acc, i, r.get(i), r.get(i))))
+      acc
+    }
+
+    def merge(a: Array[Any], b: Array[Any]): Array[Any] = {
+      val acc = a.clone()
+      isStr.indices.foreach(i => widen(acc, i, b(2 * i), b(2 * i + 1)))
+      acc
+    }
   }
 
   /** Numeric-domain projection of [[typedBounds]] (kept for the

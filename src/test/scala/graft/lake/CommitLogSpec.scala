@@ -2178,6 +2178,57 @@ class CommitLogSpec extends AnyFunSuite {
     assert(markedFiles == distinctCollect(marks, "__dv_file") &&
       markedFiles == log.liveFiles().sorted && markedFiles.size == 2)
   }
+
+  test("post-commit rule under a trusted _stats sidecar: appends " +
+      "extend it, row rewrites and restore drop it, meta commits and " +
+      "positional deletes leave it; onCommit fires once per version") {
+    val dir = TestSpark.tempDir("clogpost")
+    val log = CommitLog(spark, dir).init()
+    var fired = 0
+    log.onCommit(() => fired += 1)
+    def band(lo: Long) = spark.range(lo, lo + 10)
+      .select(col("id"), (col("id") * 3).as("x")).coalesce(1)
+    log.append(band(0)) // v1
+    log.buildStats()
+    def indexed = FileStats.indexedFiles(spark, dir)
+      .map(_.map(_.split('/').last).sorted)
+    def sidecarDir = new java.io.File(dir, "_stats")
+    // `verb` commits `n` versions and fires the hook once for each
+    def commits(n: Int)(verb: => Any): Unit = {
+      val (v0, f0) = (log.latestVersion(), fired)
+      verb
+      assert(log.latestVersion() == v0 + n && fired == f0 + n,
+        s"expected $n commit(s) and hook call(s)")
+    }
+    def extended(verb: => Any): Unit = {
+      commits(1)(verb)
+      assert(FileStats.trusted(spark, dir) &&
+        indexed.contains(log.liveFiles().sorted),
+        "the sidecar must stay trusted and index every live file")
+    }
+    def untouched(n: Int)(verb: => Any): Unit = {
+      val before = indexed
+      commits(n)(verb)
+      assert(before.nonEmpty && indexed == before,
+        "the sidecar must be left as it was")
+    }
+    def dropped(verb: => Any): Unit = {
+      commits(1)(verb)
+      assert(!FileStats.trusted(spark, dir) && !sidecarDir.exists(),
+        "the sidecar must be dropped")
+    }
+    extended(log.append(band(10)))
+    extended(log.appendOnce(band(20), "post", 1L))
+    extended(assert(log.upsert(band(30), Seq("id"))._2 == 0))
+    untouched(1)(log.setProperties(Map("k" -> "v")))
+    untouched(0)(log.unsetProperties(Seq("nokey"), ifExists = true))
+    untouched(1)(assert(log.deleteWhereMor("id = 1")._2 == 1L))
+    untouched(0)(assert(log.deleteWhere("id = 999")._2 == 0))
+    dropped(assert(log.deleteWhere("id = 12")._2 == 1))
+    log.buildStats()
+    dropped(log.restore(1L))
+    assert(log.read().count() == 10)
+  }
 }
 
 object CommitLogSpec {
