@@ -56,6 +56,18 @@ object GraftSqlBridge {
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
 
+  /** A batch frame over executed rows (`internalCreateDataFrame` is
+    * `private[sql]`): the RDD's partitions stay the frame's partitions,
+    * so a caller that unions per-task RDDs keeps one task per part —
+    * a Dataset union of single-partition children would zip them into
+    * one (`spark.sql.unionOutputPartitioning`). */
+  def frameOf(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[
+        org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
+
   /** Register an expression builder as a session temp SQL function
     * (`sessionState`/`functionRegistry` are `private[sql]`) — what
     * exposes the native codegen kernels (charFold, simhash, dot) to

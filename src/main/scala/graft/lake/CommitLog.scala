@@ -980,12 +980,16 @@ final class CommitLog(spark: SparkSession, root: String) {
       // is the very thing inference deserializes, so this is
       // byte-identical to the inferred schema (NOT the manifest
       // schema: some verbs record the name-SORTED unified order while
-      // footers keep the physical write order). Partitioned tables
-      // keep inference (partition columns ride in paths and inference
-      // appends them — a footer schema lacks them).
+      // footers keep the physical write order). On a partitioned table
+      // the footers lack the partition columns, which ride in paths:
+      // basePath discovery appends them after the declared ones, where
+      // inference puts them — unless a footer column shares a key's
+      // name, which keeps inference.
       val uniform: Option[StructType] =
-        if (partitioned || names.isEmpty) None
+        if (names.isEmpty) None
         else SchemaTools.uniformFooterSchema(spark, names.map(dataPath))
+          .filterNot(_.fieldNames.exists(n =>
+            partitionCols.exists(_.equalsIgnoreCase(n))))
       val s = meta(scan(uniform, names.map(dataPath)))
       // partition VALUES live in paths, so their types come from
       // Spark's path inference (bucket=0 reads back int) — cast them
@@ -2184,7 +2188,20 @@ final class CommitLog(spark: SparkSession, root: String) {
   /** OPTIMIZE — compaction as a TRANSACTION (Delta OPTIMIZE / Iceberg
     * RewriteFiles): pack the live data files into `targetFiles` outputs
     * and commit a REWRITE that swaps inputs for outputs in the resolved
-    * state. Row-preserving by construction: the packed outputs are read
+    * state.
+    *
+    * The pack merges WHOLE files and never splits one: the inputs, in
+    * log order, are cut into `min(targetFiles, inputs)` contiguous runs
+    * of similar byte size ([[Compact.bins]]), and each run is scanned
+    * and written by one task — one write job, no exchange — so each
+    * packed file spans only its own run's keys and later verbs keep
+    * pruning by span (`zorderBy` re-clusters instead). Each run reads
+    * like the whole pack would (standing positional marks applied),
+    * conformed to the whole input set's schema, so the pack also heals
+    * drift. On a partitioned table a run writes one file per partition
+    * value it holds.
+    *
+    * Row-preserving by construction: the packed outputs are read
     * straight from the inputs with NO tombstone subtraction (standing
     * MOR tombstones are key-based, so they keep subtracting from the
     * packed files exactly as they did from the originals), and old
@@ -2264,13 +2281,17 @@ final class CommitLog(spark: SparkSession, root: String) {
           .select("__src").collect()
           .map(x => relName(x.getString(0))).toSeq
       }
-    // zorderBy: re-cluster along the Morton curve instead of a plain
-    // repartition — the OPTIMIZE ZORDER BY composition; same rewrite
+    // zorderBy: re-cluster along the Morton curve instead of packing
+    // whole files — the OPTIMIZE ZORDER BY composition; same rewrite
     // commit, but the packed layout now serves multi-axis span pruning
     // (buildStats afterwards re-spans the clustered files)
     val packed =
       if (zorderBy.nonEmpty) ZOrder.cluster(raw, zorderBy, targetFiles)
-      else raw.repartition(targetFiles)
+      else Compact.packFrame(spark,
+        Compact.bins(inputs.zip(SchemaTools.sizesOf(spark,
+          inputs.map(dataPath))), targetFiles)
+          .map(readApplied(_, r.schemaOf, dvStanding)),
+        raw.schema)
     val names = stage(packed)
     val spans = spansOf(names, Some(raw.schema))
     new Txn("optimize", plannedV, rewrites = inputs).run(_ =>

@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Small-file compaction: bin-pack every partition's data files to a
@@ -9,11 +9,21 @@ import org.apache.spark.sql.types.StructType
   * appends, which land one small file per batch.
   *
   * Reference analog: repartitioning with a row-group/file-size knob
-  * (`/root/reference/src/pydala/dataset/repartition.py:151`); Spark-first
-  * shape here is the Delta-Lake-OPTIMIZE layout: per partition-leaf,
-  * `ceil(bytes / targetBytes)` output files, already-right-sized leaves
-  * skipped, leaf jobs submitted CONCURRENTLY on a bounded pool (the
-  * Spark scheduler is thread-safe; each leaf is one distributed job).
+  * (pydala's `dataset/repartition.py`); Spark-first shape here is the
+  * Delta-Lake-OPTIMIZE layout: per partition-leaf, `n =
+  * ceil(bytes / targetBytes)` output files, leaf jobs submitted
+  * CONCURRENTLY on a bounded pool (the Spark scheduler is thread-safe;
+  * each leaf is one distributed job).
+  *
+  * The pack rule, shared with [[CommitLog.optimize]] ([[bins]],
+  * [[packFrame]]): compaction merges WHOLE files and never splits one.
+  * The leaf's files, in write order (modification time, then name), are
+  * cut into `min(n, files)` contiguous runs of similar byte size; each
+  * run is scanned and written by one task, so the pack is one write job
+  * with no exchange, and each output file spans only its own run's keys
+  * (a round-robin shuffle would deal every key to every file and defeat
+  * min/max pruning). A leaf with at most `n` files is therefore already
+  * right-sized and skipped.
   *
   * Compaction is content-preserving (a multiset no-op — oracle-gated by
   * q78) and additionally HEALS schema drift: when the dataset's
@@ -44,6 +54,40 @@ import org.apache.spark.sql.types.StructType
 object Compact {
 
   private val SwapManifest = "_swap_manifest"
+
+  /** Cut `inputs` — in order, each with its byte size — into
+    * `min(n, inputs.size)` non-empty bins, each a contiguous run. Bin
+    * `i` (from 0) starts once the running total reaches
+    * `i * total / k`, or when the inputs left equal the bins left; so
+    * no bin exceeds `total / k` plus the largest input. */
+  private[lake] def bins[A](inputs: Seq[(A, Long)], n: Int): Seq[Seq[A]] = {
+    require(n >= 1, "n must be >= 1")
+    val k = math.min(n, inputs.size)
+    val total = BigInt(inputs.map(_._2).sum)
+    val out = scala.collection.mutable.ArrayBuffer[Vector[A]]()
+    var acc = BigInt(0)
+    inputs.zipWithIndex.foreach { case ((a, size), i) =>
+      val open = out.size
+      if (open == 0 || (open < k &&
+          (acc * k >= total * open || inputs.size - i == k - open)))
+        out += Vector.empty
+      out(out.size - 1) = out.last :+ a
+      acc += size
+    }
+    out.toSeq
+  }
+
+  /** One frame whose partition `i` is bin `i`, conformed to `schema`:
+    * each bin's scan collapses to one task and the bins' row RDDs are
+    * unioned, so writing the frame is one job with no exchange, one
+    * file per bin (per partition value it holds, on a hive-partitioned
+    * write). */
+  private[lake] def packFrame(spark: SparkSession, bins: Seq[DataFrame],
+      schema: StructType): DataFrame =
+    GraftSqlBridge.frameOf(spark,
+      spark.sparkContext.union(bins.map(b =>
+        SchemaTools.conformTo(b, schema).coalesce(1).queryExecution.toRdd)),
+      GraftSqlBridge.asNullable(schema))
 
   private[lake] def writeSwapManifest(
       fs: org.apache.hadoop.fs.FileSystem,
@@ -192,13 +236,16 @@ object Compact {
       // a prior crashed compaction must be healed before this leaf's
       // file listing means anything
       recoverTmp(fs, new Path(leaf, "_compact_tmp"))
+      // write order: the order the pack's contiguous runs follow
       val files = fs.listStatus(leaf)
         .filter(s => s.isFile && !hidden(s.getPath.getName))
         .filter(_.getPath.getName.endsWith(".parquet"))
+        .sortBy(s => (s.getModificationTime, s.getPath.getName))
       if (files.isEmpty) return LeafResult(0, 0, rewrote = false)
       val bytes = files.map(_.getLen).sum
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      if (files.length == n && !healDrift && zorderBy.isEmpty)
+      // no-split rule: at most n files is right-sized
+      if (files.length <= n && !healDrift && zorderBy.isEmpty)
         return LeafResult(files.length, files.length, rewrote = false)
 
       val filePaths = files.map(_.getPath.toString).toSeq
@@ -208,32 +255,33 @@ object Compact {
       // leaves. Otherwise group by physical schema: the per-leaf read
       // tolerates intra-leaf heterogeneity (drifted appends land in the
       // same leaf as the original files).
-      val df: DataFrame =
-        if (marker.exists(_.homogeneous)) {
-          val unified = leafConformSchema(leaf).get
+      val homogeneous = marker.exists(_.homogeneous)
+      val schemaOf: Map[String, StructType] =
+        if (homogeneous) Map.empty
+        else SchemaTools.fileSchemas(spark, filePaths).toMap
+      val unified = leafConformSchema(leaf).getOrElse(
+        SchemaTools.unifySchemas(schemaOf.values.toSeq.distinct))
+      def read(paths: Seq[String]): DataFrame =
+        if (homogeneous)
           SchemaTools.conformTo(
-            spark.read.parquet(filePaths: _*), unified)
-        } else {
-          val bySchema = SchemaTools.fileSchemas(spark, filePaths)
-            .groupBy(_._2).view.mapValues(_.map(_._1)).toSeq
-          val unified = leafConformSchema(leaf).getOrElse(
-            SchemaTools.unifySchemas(bySchema.map(_._1)))
-          bySchema
-            .map { case (sch, fls) =>
-              SchemaTools.conformTo(
-                spark.read.schema(sch).parquet(fls: _*), unified)
-            }
-            .reduce(_.unionByName(_))
-        }
+            SchemaTools.parquetReader(spark, paths).parquet(paths: _*),
+            unified)
+        else paths.groupBy(schemaOf).toSeq
+          .map { case (sch, fls) =>
+            SchemaTools.conformTo(
+              spark.read.schema(sch).parquet(fls: _*), unified)
+          }
+          .reduce(_.unionByName(_))
 
       val tmp = new Path(leaf, "_compact_tmp")
       val packedDf =
         if (zorderBy.nonEmpty)
           // a wide column list must shrink per-column bits to keep the
           // interleaved z-value inside a long (bits * cols <= 62)
-          ZOrder.cluster(df, zorderBy, n,
+          ZOrder.cluster(read(filePaths), zorderBy, n,
             bits = math.max(1, math.min(16, 62 / zorderBy.size)))
-        else df.repartition(n)
+        else packFrame(spark,
+          bins(filePaths.zip(files.map(_.getLen)), n).map(read), unified)
       packedDf.write.mode("overwrite")
         .option("compression", compression).parquet(tmp.toString)
       val packed = fs.listStatus(tmp)

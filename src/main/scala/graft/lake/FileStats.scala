@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, NumericType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, Metadata, MetadataBuilder, NumericType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** File-level min/max statistics manifest — the reader-side payoff of
   * clustered layouts: a `_stats/` sidecar mapping every data file to
@@ -273,9 +273,23 @@ object FileStats {
           s"bloom columns must be string or integral; $c is " +
             f.dataType.simpleString))
       udaf(new BloomAgg(bits, dom), org.apache.spark.sql.Encoders.STRING)
-        .apply(col(c).cast("string")).as(s"${c}_bloom")
+        .apply(col(c).cast("string")).as(s"${c}_bloom", bloomMeta(bits, dom))
     }
   }
+
+  /** A bloom column's width and domain, recorded as field metadata on
+    * `<c>_bloom`: the sidecar's footer schema carries them, so
+    * [[appendFiles]] recovers them without reading a blob. */
+  private def bloomMeta(bits: Int, dom: Byte): Metadata =
+    new MetadataBuilder().putLong("bloomBits", bits.toLong)
+      .putLong("bloomDomain", dom.toLong).build()
+
+  /** (bits, domain) recorded on a `<c>_bloom` field, if any. */
+  private def bloomParamsOf(f: StructField): Option[(Int, Byte)] =
+    if (f.metadata.contains("bloomBits") && f.metadata.contains("bloomDomain"))
+      Some((f.metadata.getLong("bloomBits").toInt,
+        f.metadata.getLong("bloomDomain").toByte))
+    else None
 
   /** Equality probes extractable from the predicate's top-level AND
     * conjuncts: `col = lit` and `col IN (lits)` — each conjunct one
@@ -871,21 +885,16 @@ object FileStats {
           }
         })
     if (!indexed.forall(domainOk)) { invalidate(spark, path); return }
-    // standing blooms maintain with the SAME width and domain as the
-    // sidecar's existing blobs (derived from any non-null blob — all
-    // blobs of a column share them by construction). A column whose
-    // parameters can't be recovered, or whose type no longer maps to
-    // the recorded domain, invalidates: degrade, never mis-prune.
+    // standing blooms maintain with the SAME width and domain the
+    // sidecar's footer schema records on each `<c>_bloom` field. A
+    // column without that record, or whose type no longer maps to the
+    // recorded domain, invalidates: degrade, never mis-prune.
     val bloomParams: Option[Seq[(String, Int, Byte)]] = {
       val ps = bloomed.map { c =>
-        val blob = standing.select(col(s"${c}_bloom"))
-          .filter(col(s"${c}_bloom").isNotNull)
-          .head(1).headOption.map(_.getAs[Array[Byte]](0))
-        (blob, df.schema.fieldNames.contains(c)) match {
-          case (Some(b), true) if b.length >= 2 &&
-              bloomDomainOf(df.schema(c).dataType).contains(b(0)) =>
-            Some((c, (b.length - 1) * 8, b(0)))
-          case _ => None
+        bloomParamsOf(statsSchema(s"${c}_bloom")).collect {
+          case (bits, dom) if df.schema.fieldNames.contains(c) &&
+              bloomDomainOf(df.schema(c).dataType).contains(dom) =>
+            (c, bits, dom)
         }
       }
       if (ps.forall(_.isDefined)) Some(ps.flatten) else None
@@ -903,7 +912,7 @@ object FileStats {
     val delta = df.groupBy(fileKeyOf(df))
       .agg(aggs.head, aggs.tail: _*)
       .select(statsSchema.fields.map(f =>
-        col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+        col(f.name).cast(f.dataType).as(f.name, f.metadata)).toSeq: _*)
     sharded(delta, bloomParams.getOrElse(Nil)
         .map { case (_, bits, _) => 1L + bits / 8 }.sum, files.length)
       .write.mode("append").parquet(d.toString)

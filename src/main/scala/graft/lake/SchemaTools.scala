@@ -115,11 +115,15 @@ object SchemaTools {
   /** Total on-disk bytes of `files` — a driver-side status listing,
     * bounded by the file count (the same scale class as planning the
     * scan that reads them). */
-  def bytesOf(spark: SparkSession, files: Seq[String]): Long = {
-    if (files.isEmpty) return 0L
+  def bytesOf(spark: SparkSession, files: Seq[String]): Long =
+    sizesOf(spark, files).sum
+
+  /** On-disk bytes of each of `files`, in order — one status each. */
+  def sizesOf(spark: SparkSession, files: Seq[String]): Seq[Long] = {
+    if (files.isEmpty) return Nil
     val fs = new Path(files.head)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    files.map(f => fs.getFileStatus(new Path(f)).getLen).sum
+    files.map(f => fs.getFileStatus(new Path(f)).getLen)
   }
 
   /** Broadcast `df` only when its source footprint (`bytes`,

@@ -272,6 +272,39 @@ class CommitLogSpec extends AnyFunSuite {
       "checkpoint resolution must equal full-log replay across rewrites")
   }
 
+  test("optimize packs contiguous runs of whole files: each packed file " +
+      "holds a run of input bands, and a narrow delete rewrites one") {
+    val log = CommitLog(spark, TestSpark.tempDir("clogpack")).init()
+    val bands = (0 until 8).map(i => (i * 100L, i * 100L + 100))
+    bands.foreach { case (lo, hi) =>
+      log.append(spark.range(lo, hi, 1, 1)
+        .select(col("id"), (col("id") * 7).as("x")))
+    }
+    val vPre = log.latestVersion()
+    val content = log.read().orderBy("id").collect().toSeq
+    log.optimize(targetFiles = 4)
+    val packed = log.liveFiles()
+    assert(packed.size == 4)
+    val edges = bands.map(_._1).toSet + 800L
+    log.filePaths(packed).foreach { p =>
+      val ids = spark.read.parquet(p).select("id").as[Long]
+        .collect().sorted.toSeq
+      val run = ids.nonEmpty && ids == (ids.head to ids.last) &&
+        edges(ids.head) && edges(ids.last + 1)
+      assert(run, s"$p holds ${ids.size} ids in " +
+        s"[${ids.headOption}, ${ids.lastOption}], not a run of whole bands")
+    }
+    assert(log.read().orderBy("id").collect().toSeq == content)
+    // ten rows inside one band: a round-robin pack would have dealt
+    // them to every packed file
+    log.deleteWhere("id BETWEEN 150 AND 159")
+    assert(packed.filterNot(log.liveFiles().toSet).size == 1,
+      "a narrow delete must rewrite exactly the one packed file")
+    assert(log.read().count() == 790)
+    assert(log.read(Some(vPre)).orderBy("id").collect().toSeq == content,
+      "time travel serves the pre-optimize version unchanged")
+  }
+
   test("appendOnce is idempotent per (app, batch); marks fold into " +
       "checkpoints and survive retention") {
     val log = CommitLog(spark, TestSpark.tempDir("clog10")).init()

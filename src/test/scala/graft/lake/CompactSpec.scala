@@ -62,6 +62,58 @@ class CompactSpec extends AnyFunSuite {
     assert(s2.rewritten == 0 && s2.filesAfter == 1)
   }
 
+  test("a key-ordered leaf packs into n contiguous runs: no output " +
+      "file spans the whole key range") {
+    val dir = TestSpark.tempDir("compact_runs") + "/ds"
+    // eight bands written one after another: write order is key order
+    (0 until 8).foreach(i => spark.range(i * 100L, i * 100L + 100, 1, 1)
+      .select($"id", ($"id" * 3).as("x")).write.mode("append").parquet(dir))
+    val total = leafFiles(dir).values.flatten.sum
+    val content = spark.read.parquet(dir).orderBy("id").collect().toSeq
+    val stats = Compact.run(spark, dir, targetBytes = total / 3 + 1)
+    assert(stats.rewritten == 1 && stats.filesBefore == 8 &&
+      stats.filesAfter == 3)
+    val spans = SchemaTools.listDataFiles(spark, dir).map { f =>
+      val ids = spark.read.parquet(f).select("id").as[Long]
+        .collect().sorted.toSeq
+      val run = ids == (ids.head to ids.last)
+      assert(run, s"$f holds ${ids.size} ids in " +
+        s"[${ids.head}, ${ids.last}], not one run")
+      (ids.head, ids.last)
+    }
+    assert(spans.forall(_ != (0L, 799L)),
+      s"no packed file may span the whole key range: $spans")
+    assert(spark.read.parquet(dir).orderBy("id").collect().toSeq == content)
+  }
+
+  test("a leaf with fewer files than ceil(bytes/target) is right-sized: " +
+      "compaction never splits a file") {
+    val dir = TestSpark.tempDir("compact_nosplit") + "/ds"
+    spark.range(0, 400, 1, 2).write.parquet(dir)
+    val total = leafFiles(dir).values.flatten.sum
+    val stats = Compact.run(spark, dir, targetBytes = total / 10 + 1)
+    assert(stats.rewritten == 0 && stats.filesBefore == 2 &&
+      stats.filesAfter == 2)
+  }
+
+  test("bins: min(k, n) non-empty contiguous runs covering every input " +
+      "once, none over total/k plus the largest input") {
+    val rng = new scala.util.Random(20261020L)
+    (0 until 500).foreach { _ =>
+      val sizes = Seq.fill(1 + rng.nextInt(40))(
+        if (rng.nextInt(5) == 0) 0L else rng.nextInt(1 << 20).toLong)
+      val k = 1 + rng.nextInt(12)
+      val bins = Compact.bins(sizes.indices.map(i => i -> sizes(i)), k)
+      val ctx = s"sizes=$sizes k=$k bins=$bins"
+      assert(bins.size == math.min(k, sizes.size), ctx)
+      assert(bins.forall(_.nonEmpty), ctx)
+      assert(bins.flatten == sizes.indices, ctx)
+      val bound = sizes.sum.toDouble / bins.size + sizes.max
+      assert(bins.forall(b => b.map(sizes).sum <= bound), ctx)
+    }
+    assert(Compact.bins(Seq.empty[(String, Long)], 3).isEmpty)
+  }
+
   test("refuses to strand manifest-only TimeFly snapshots") {
     val root = TestSpark.tempDir("compact_tf")
     val tf = TimeFly(spark, root).init("pinned")

@@ -22,9 +22,11 @@ import graft.TestSpark
   * job" is a `collect` issued from FileStats.scala: one read of the
   * `_stats` sidecar by a prune. Bracketed counts are the ones measured
   * before the touched-file probe and the single-shard sidecar write
-  * lost their extra shuffle. The upsert and merge totals were one
-  * higher (6 and 8) while the batch key-range probe ran as a global
-  * aggregate.
+  * lost their extra shuffle, before optimize packed whole files without
+  * a shuffle, and before a sidecar append read the bloom width from
+  * the sidecar's footer schema instead of a `head` over its rows. The
+  * upsert and merge totals were one higher (6 and 8) while the batch
+  * key-range probe ran as a global aggregate.
   *
   * Ceilings may only be tightened. Raising one needs its cause written
   * in CHANGES.md.
@@ -153,13 +155,25 @@ class JobBudgetSpec extends AnyFunSuite {
     val app = jobSites(plain.append(band(100)))
     assert(app.size <= 1, app)
     assert(jobSites(plain.setProperties(Map("k" -> "v"))).isEmpty)
-    // the first append after buildStats also extends the sidecar
+    // the first append after buildStats also extends the sidecar; the
+    // bloom width comes from the sidecar's footer schema, not a `head`
     val log = spannedLog("jbverbs2")
     val ext = jobSites(log.append(band(300)))
-    assert(ext.size <= 4, ext)
+    assert(ext.size <= 3, ext) // [4]
+    // a pack of whole files: one write job, no shuffle
     val opt = jobSites(log.optimize(targetFiles = 1))
-    assert(opt.size <= 2, opt)
+    assert(opt.size <= 1, opt) // [2]
     assert(log.read().count() == 400 && log.liveFiles().size == 1)
+  }
+
+  test("optimize(targetFiles = 3) on 9 files: one job, 3 live files") {
+    val log = CommitLog(spark, TestSpark.tempDir("jbpack")).init()
+    (0 until 9).foreach(i => log.append(spark.range(i * 100L, i * 100L + 100)
+      .select(col("id"), (col("id") * 3).as("x")).coalesce(1)))
+    assert(log.liveFiles().size == 9, "fixture: 9 single-file appends")
+    val sites = jobSites(log.optimize(targetFiles = 3))
+    assert(sites.size == 1, sites)
+    assert(log.liveFiles().size == 3 && log.read().count() == 900)
   }
 
   test("buildStats with a bloom column: at most 2 write jobs") {

@@ -2,6 +2,7 @@
 """A/B the lake benchmark between two checkouts, in alternating pairs.
 
     python3 tools/ab_pairs.py <parentDir> <changeDir> --workload W --seeds A-B
+    python3 tools/ab_pairs.py <parentDir> <changeDir> --workload all --seeds A-B
 
 For each seed from A to B (inclusive) it runs
 `python3 lakebench/run.py --workload W --seed S --trace 0` once in each
@@ -13,8 +14,13 @@ It then prints, for every end-to-end metric that BENCHMARK.json declares:
 the parent's and the change's median with their quartiles [q1, q3], and on
 how many pairs the change was better. A metric whose change median is worse
 than the parent median by more than its bound is flagged WORSE. BENCHMARK.json
-is read from the parent checkout and never written. The exit status is 1 when
-a metric is flagged or a run failed, else 0.
+is read from the parent checkout and never written.
+
+`--workload all` does this for every workload BENCHMARK.json lists, one after
+the other on the same seeds, and ends with one verdict line per workload: OK,
+or WORSE with the flagged metrics (a failed run counts as WORSE). That is the
+rule "no end-to-end metric worse than its bound on any workload". The exit
+status is 1 when a metric is flagged or a run failed, else 0.
 """
 
 import argparse
@@ -76,20 +82,9 @@ def fmt(x):
     return f"{x:.4g}"
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("parent")
-    ap.add_argument("change")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", type=parse_seeds, required=True,
-                    help="inclusive range A-B, e.g. 901-910")
-    ap.add_argument("--timeout", type=int, default=900,
-                    help="seconds allowed for one run, build included")
-    args = ap.parse_args()
-
-    with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
-
+def ab(args, workload, metrics):
+    """A/B one workload; the names of the flagged metrics and the count of
+    pairs with a failed run."""
     sides = {"parent": args.parent, "change": args.change}
     results = {"parent": [], "change": []}
     failed = 0
@@ -97,8 +92,7 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {}
         for side in order:
-            pair[side] = run_once(sides[side], args.workload, seed,
-                                  args.timeout)
+            pair[side] = run_once(sides[side], workload, seed, args.timeout)
         if pair["parent"] is None or pair["change"] is None:
             failed += 1
             continue
@@ -107,11 +101,11 @@ def main():
         ok = "  ".join(
             f"{s} {pair[s]['attempted'] - pair[s]['failed']}/"
             f"{pair[s]['attempted']} ok" for s in order)
-        print(f"pair {i} seed {seed} ({order[0]} first): {ok}",
+        print(f"{workload} pair {i} seed {seed} ({order[0]} first): {ok}",
               file=sys.stderr)
 
     n = len(results["parent"])
-    print(f"{args.workload}: {n} pairs, seeds {args.seeds[0]}-"
+    print(f"{workload}: {n} pairs, seeds {args.seeds[0]}-"
           f"{args.seeds[-1]}, {failed} pair(s) with a failed run")
     flagged = []
     for m in metrics:
@@ -134,7 +128,41 @@ def main():
         print(f"  {name:18s} {fmt(pm)} [{fmt(p1)}, {fmt(p3)}] -> "
               f"{fmt(cm)} [{fmt(c1)}, {fmt(c3)}] {m['unit']}, "
               f"{better} is better, wins {wins}/{n}{flag}")
-    return 1 if flagged or failed else 0
+    return flagged, failed
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("parent")
+    ap.add_argument("change")
+    ap.add_argument("--workload", required=True,
+                    help="a workload BENCHMARK.json lists, or 'all'")
+    ap.add_argument("--seeds", type=parse_seeds, required=True,
+                    help="inclusive range A-B, e.g. 901-910")
+    ap.add_argument("--timeout", type=int, default=900,
+                    help="seconds allowed for one run, build included")
+    args = ap.parse_args()
+
+    with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    names = [w["name"] for w in bench["workloads"]]
+    if args.workload == "all":
+        workloads = names
+    elif args.workload in names:
+        workloads = [args.workload]
+    else:
+        ap.error(f"unknown workload {args.workload}; one of {names} or all")
+
+    verdicts = []
+    for w in workloads:
+        flagged, failed = ab(args, w, bench["end_to_end"])
+        why = flagged + ([f"{failed} failed pair(s)"] if failed else [])
+        verdicts.append((w, why))
+    if args.workload == "all":
+        for w, why in verdicts:
+            print(f"VERDICT {w}: " +
+                  (f"WORSE ({', '.join(why)})" if why else "OK"))
+    return 1 if any(why for _, why in verdicts) else 0
 
 
 if __name__ == "__main__":
